@@ -1008,6 +1008,10 @@ object Bench {
       n -= 1
       line = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","nqueries":${full.size},$metaSlim,"queries":${toJson(top.take(n))},"sf":"$sfDir"}"""
     }
+    if (n < top.size)
+      System.err.println(s"[bench] WARNING: stdout line over 24000 chars; " +
+        s"dropped the ${top.size - n} lightest of ${top.size} query entries " +
+        s"(all of them are in $detailsPath)")
     println(line)
     System.out.flush()
     } // ------------------------------------------------------ end emit

@@ -119,8 +119,9 @@ object Endpoints {
     * serve, batched. Decides per-request refresh via
     * [[RecCache.refreshDecisions]] ((alpha, rules_version) invalidation
     * + explicit-alpha pin), recomputes hybrid recommendations ONLY for
-    * the stale households (the `targetUsers` semi-predicate restricts
-    * the CF + assoc mining input), serializes the fresh top-N per
+    * the stale households (their collected ids are the `targetUsers`
+    * predicate of the CF + assoc mining; no mining runs when every
+    * request is a hit), serializes the fresh top-N per
     * household to a JSON payload, and upserts
     * ([[RecCache.refreshedCacheWith]]). Returns the refreshed cache
     * state — hit households keep their stored payload untouched,
@@ -131,21 +132,31 @@ object Endpoints {
                                   requests: DataFrame, cache: DataFrame,
                                   latestVersion: DataFrame, alpha: Double,
                                   topN: Int): DataFrame = {
+    // request-batch grain, read by the stale-id collect and the upsert;
+    // a lazy local checkpoint (unlike cache()) is released by the
+    // ContextCleaner once the returned frame is unreachable
     val decisions = RecCache.refreshDecisions(requests, cache,
-      latestVersion).cache()
+      latestVersion).localCheckpoint(eager = false)
+    // one small job: the directed CF path needs a SELECTIVE target
+    // predicate (Collab.directedSimilarities' CONTRACT), and a literal id
+    // list keeps the mining plan free of an isin(Dataset) subquery
     val stale = decisions.where(col("recalculate"))
-      .select(col("household").as("u"))
-    // the mining input stays FULL — CF similarities need every user's
-    // baskets even when only a few households are stale; the stale set
-    // restricts which users' blended lists are kept (semi-join on the
-    // recommendation grain, not on the transactions)
-    val fresh = hybridRecommendations(tx, user, item, basket, alpha, topN)
-      .join(stale, Seq("u"), "left_semi")
-      .groupBy(col("u").as("household"))
-      .agg(to_json(sort_array(collect_list(struct(
-        col("hybrid_score").as("score"), col("i"))), asc = false))
-        .as("payload")) // rank-ordered payload
-    RecCache.refreshedCacheWith(cache, decisions, fresh)
+      .select(col("household")).collect().map(_.get(0))
+    if (stale.isEmpty) // all hits: the cache state is unchanged
+      cache.select(col("household"), col("alpha"), col("rules_version"),
+        col("payload"))
+    else {
+      // the mining input stays FULL — CF similarities need every user's
+      // baskets — while the target predicate restricts which users'
+      // similarities, assoc scores and blended lists are computed
+      val fresh = hybridRecommendations(tx, user, item, basket, alpha, topN,
+          targetUsers = _.isin(stale.toSeq: _*))
+        .groupBy(col("u").as("household"))
+        .agg(to_json(sort_array(collect_list(struct(
+          col("hybrid_score").as("score"), col("i"))), asc = false))
+          .as("payload")) // rank-ordered payload
+      RecCache.refreshedCacheWith(cache, decisions, fresh)
+    }
   }
 
   /** EP-8 `manage.py optimize_churn_model`

@@ -69,22 +69,34 @@ object Rfm {
     * every other row gets its bucket from a map-only comparison against
     * the collected boundary keys — rank ≤ b_k ⟺ (axis, customer) ≤
     * boundary_k, because the composite key is UNIQUE (customer is a
-    * key). One pass per axis; the three axes share the cached base. */
+    * key). One pass per axis; the three axes share the cached base.
+    *
+    * EAGER: the call runs its jobs before it returns — the cached
+    * base's count, then per axis the range-partitioner sample, the
+    * sort's shuffle stage, zipWithIndex's partition-size job and the
+    * boundary-key collect (14 jobs for the three RFM axes, measured
+    * locally with AQE on). The base cache lives only for those jobs: it
+    * is released once every axis's keys are on the driver, and the
+    * returned frame recomputes the base. */
   private def distributedNtileScores(b: DataFrame,
                                      axes: Seq[(String, Boolean)])
       : DataFrame = {
     val cached = b.cache()
-    val n = cached.count()
-    val q = n / 5
-    val r = n % 5
-    val boundaryRanks = (1 to 4).map(k => k * q + math.min(k, r))
-      .filter(bk => bk >= 1 && bk < n) // degenerate tiny inputs
-    axes.foldLeft(cached) { case (acc, (axis, reversed)) =>
-      val keys = cached.select(col(axis), col("customer"))
-        .orderBy(col(axis).asc, col("customer").asc)
-        .rdd.zipWithIndex()
-        .filter { case (_, idx) => boundaryRanks.contains(idx + 1) }
-        .map(_._1).collect()
+    val axisKeys = try {
+      val n = cached.count()
+      val q = n / 5
+      val r = n % 5
+      val boundaryRanks = (1 to 4).map(k => k * q + math.min(k, r))
+        .filter(bk => bk >= 1 && bk < n) // degenerate tiny inputs
+      axes.map { case (axis, reversed) =>
+        (axis, reversed, cached.select(col(axis), col("customer"))
+          .orderBy(col(axis).asc, col("customer").asc)
+          .rdd.zipWithIndex()
+          .filter { case (_, idx) => boundaryRanks.contains(idx + 1) }
+          .map(_._1).collect())
+      }
+    } finally cached.unpersist()
+    axisKeys.foldLeft(b) { case (acc, (axis, reversed, keys)) =>
       // rank(row) > b_k  ⟺  (axis, cust) > key_k  (unique composite)
       val bucket = keys.foldLeft(lit(1)) { (e, key) =>
         val (ka, kc) = (key.get(0), key.getAs[Any](1))

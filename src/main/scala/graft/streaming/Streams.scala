@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -72,19 +73,45 @@ object Streams {
     * engine's exactness rules); the knob sizes state parallelism to the
     * stream's actual volume, in either direction — gates size it DOWN
     * (toy backlog, 4-8 micro-batches), a production deployment sizes it
-    * UP to its key cardinality. */
+    * UP to its key cardinality.
+    *
+    * The drain also writes its checkpoint through Spark's
+    * `FileSystem`-based checkpoint manager. The default FileContext
+    * manager commits every state delta, checksum and log file by
+    * renaming a temp file through `AbstractFileSystem.rename`, which on
+    * the local filesystem calls `FileUtil.readLink`: one `readlink` child
+    * process per file. `FileSystem.rename` (`File.renameTo`) spawns
+    * nothing. The one guarantee given up is FileContext's atomic
+    * rename-unless-the-target-exists, which protects a checkpoint that
+    * two queries write at once. A drain writes its own fresh temporary
+    * checkpoint and Spark refuses two active queries with one name, so a
+    * drain checkpoint never has a second writer. Checkpoint contents and
+    * checksum verification are unchanged. Child processes per drain on
+    * the perfbench refresh workload (JFR `jdk.ProcessStart`, sf0.01,
+    * 4 state partitions), default manager → this one: stream_join
+    * 1,153 → 257, stream_dedup 262 → 62, stream_sessions 252 → 60. The
+    * spawns left are `chmod` calls on file create and mkdir, which the
+    * local filesystem makes for every writer, sinks included.
+    *
+    * Both confs are scoped to the drain and restored on every exit path;
+    * the streaming query copies the session's confs when it starts. */
   def runToTable(df: DataFrame, name: String, mode: OutputMode,
                  statePartitions: Option[Int] = None): DataFrame = {
     val spark = df.sparkSession
     spark.catalog.dropTempView(name) // stale view from a prior run
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n.toString))
+    val scoped = Seq("spark.sql.streaming.checkpointFileManagerClass" ->
+        classOf[FileSystemBasedCheckpointFileManager].getName) ++
+      statePartitions.map(n => "spark.sql.shuffle.partitions" -> n.toString)
+    val prev = scoped.map { case (k, _) => k -> spark.conf.getOption(k) }
     try {
+      scoped.foreach { case (k, v) => spark.conf.set(k, v) }
       val q = df.writeStream.format("memory").queryName(name)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
     spark.table(name)
   }
 

@@ -62,9 +62,9 @@ class EndpointsSpec extends SparkSpec {
       .toDF("household", "alpha", "rules_version", "payload")
     val requests = users.toSeq.map(u => (u, 0.6, false))
       .toDF("household", "alpha", "alpha_explicit")
-    val out = Endpoints.cachedHybridRecommendations(tx, "o_custkey",
+    val refreshed = Endpoints.cachedHybridRecommendations(tx, "o_custkey",
       "l_partkey", "l_orderkey", requests, cache, v1, 0.6, 5)
-      .collect().map(r => r.getLong(0) -> r).toMap
+    val out = refreshed.collect().map(r => r.getLong(0) -> r).toMap
     assert(out.size == 3)
     assert(out(users(0)).getAs[String]("payload") == "kept")
     assert(out(users(1)).getAs[String]("payload") != "stale")
@@ -72,6 +72,11 @@ class EndpointsSpec extends SparkSpec {
       .toString == "2024-01-01"))
     // recomputed payloads are JSON arrays (possibly empty)
     assert(out(users(2)).getAs[String]("payload").startsWith("["))
+    // the same requests against the refreshed cache are all hits: the
+    // cache comes back unchanged
+    val again = Endpoints.cachedHybridRecommendations(tx, "o_custkey",
+      "l_partkey", "l_orderkey", requests, refreshed, v1, 0.6, 5)
+    assert(again.collect().toSet == out.values.toSet)
   }
 
   test("EP-7 matched rules score = confidence x lift per fired rule") {

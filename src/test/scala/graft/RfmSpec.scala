@@ -93,7 +93,10 @@ class RfmSpec extends SparkSpec {
         case None => sys.props.remove("graft.rfm.ntile.distributed")
       }
     }
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
     assert(run(distributed = true) === run(distributed = false))
+    // the distributed backend releases its base cache before returning
+    assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
     // and on the tiny original fixture (n = 10 < bucket count edge is
     // covered by InvariantsCheck-style small n: 10 rows, 5 buckets)
     def runTx(distributed: Boolean) = {

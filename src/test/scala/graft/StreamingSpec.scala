@@ -2,8 +2,10 @@ package graft
 
 import graft.streaming.Streams
 import graft.streaming.Streams.Event
+import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -244,5 +246,57 @@ class StreamingSpec extends SparkSpec {
         b -> ps.size / 8 }
       assert(perDoc(5L) == cap && perDoc(6L) == cap)
     }
+  }
+
+  /** A finite two-file event backlog with duplicate (user, type) pairs,
+    * in [[Streams.eventStreamMicros]]' on-disk shape. */
+  private lazy val backlog: String = {
+    val out = java.nio.file.Files.createTempDirectory("graft_drain").toString
+    (1L to 40L).map(i => (i, i * 60000000L, i % 7, if (i % 3 == 0) "click"
+        else "view", i.toDouble))
+      .toDF("event_id", "ts_us", "user_id", "event_type", "value")
+      .repartition(2).write.mode("overwrite").parquet(out)
+    out
+  }
+
+  private def dedupDrain(name: String) =
+    Streams.runToTable(Streams.streamingDedupGlobal(
+        Streams.eventStreamMicros(spark, backlog, Some(1)),
+        Seq("user_id", "event_type")),
+      name, OutputMode.Append(),
+      statePartitions = Some(2))
+
+  private val checkpointManager =
+    "spark.sql.streaming.checkpointFileManagerClass"
+  private def drainConfs = Seq("spark.sql.shuffle.partitions",
+    checkpointManager).map(spark.conf.getOption)
+
+  test("runToTable restores shuffle partitions and the checkpoint " +
+      "manager after a drain, also when the query throws") {
+    val fileContext = classOf[FileContextBasedCheckpointFileManager].getName
+    // both an unset manager conf and a caller's own value come back
+    for (callerManager <- Seq(None, Some(fileContext))) {
+      callerManager.foreach(spark.conf.set(checkpointManager, _))
+      try {
+        val before = drainConfs
+        assert(dedupDrain("drain_ok").count() == 14L) // 7 users x 2 types
+        assert(drainConfs == before)
+        val failing = Streams.eventStreamMicros(spark, backlog)
+          .withColumn("boom", raise_error(lit("boom")))
+        intercept[StreamingQueryException] {
+          Streams.runToTable(failing, "drain_fail", OutputMode.Append(),
+            statePartitions = Some(3))
+        }
+        assert(drainConfs == before)
+      } finally spark.conf.unset(checkpointManager)
+    }
+  }
+
+  test("runToTable: draining the same name twice returns the full " +
+      "result both times") {
+    val first = dedupDrain("drain_twice").collect().toSet
+    val second = dedupDrain("drain_twice").collect().toSet
+    assert(first.size == 14)
+    assert(second == first)
   }
 }
