@@ -41,9 +41,9 @@ import org.apache.spark.sql.SparkSession
   *     each query's reps consecutively, maximally self-warm, while a
   *     pass-interleaved draw pays the JVM-state debt of the ~166
   *     queries before it. The debt is real
-  *     and systematic, not noise: the drift-cancelled interleaved A/B in
-  *     [[graft.tools.CfBisect]] measured q_cf_recommendations at
-  *     min 4.96 s isolated vs 5.91 s immediately after a q_cf_family
+  *     and systematic, not noise: a drift-cancelled interleaved A/B
+  *     (SCALE.md "Round-13 bisect of the r10–r12 oscillation") measured
+  *     q_cf_recommendations at min 4.96 s isolated vs 5.91 s immediately after a q_cf_family
   *     draw (identical 19-job plan, GC pauses ≤ 0.16 s, not removed by
   *     blocking unpersist + a 1 s drain), and alphabetical pass order
   *     made that adjacency permanent for every interleaved draw. The
@@ -74,7 +74,7 @@ import org.apache.spark.sql.SparkSession
   *     deeper Spark budget stays symmetric). The artifact records ν
   *     ("noise_factor"), both gates, and per-query interleaved vs
   *     consecutive minima ("pass_min"/"consec_min" — round-13 stretch
-  *     ask: tools/CfBisect measured a systematic +0.9 s JVM
+  *     ask: the round-13 bisect measured a systematic +0.9 s JVM
   *     pass-adjacency tax, and publishing both minima makes any future
   *     oscillation self-diagnosing from the artifact alone).
   *
@@ -200,8 +200,8 @@ object Bench {
   /** Consecutive self-adjacent draws per query (round 14: raised from
     * 2-for-tail/3-for-substantial to 3 for EVERYONE — the first
     * consecutive draw still pays the JVM-state debt of the previous
-    * query's block (tools/CfBisect measured ≈+0.9 s of pass-adjacency
-    * tax that survives blocking unpersist + a drain), so a 2-draw
+    * query's block (the round-13 bisect, SCALE.md, measured ≈+0.9 s of
+    * pass-adjacency tax that survives blocking unpersist + a drain), so a 2-draw
     * block can leave exactly ONE debt-free reading: an unreproducible
     * min, which is what put 12 tail queries on the round-13 driver
     * capture's 19-flag unstable list). The settling stage reserves
@@ -347,11 +347,6 @@ object Bench {
       "SCALE.md#ledger-r16-q_corpus_dedup (24 jobs NAMED, all stages <=0.4s, no actions/eager barriers to fold; wall-minus-stage-sum is inter-job driver time; job count measured CONSTANT in corpus size at the r16 10x point, so the floor share self-heals at scale; r15 2.77x-dirty/1.89x-clean straddle = capture noise)",
     "q_minhash_lsh" ->
       "SCALE.md#ledger-r16-q_minhash_lsh (first adjudication: 15 jobs, stage-wall 1.45s vs 2.12s isolated steady state, heaviest stage 0.24s banded self-join; ~1.4s is 15 scheduling floors on 0.24s of real work - the LSH candidate-bounding working as designed; job count constant at the 10x point)",
-    // r17 retirement: q_neardup_components_star (2.25x on the r17
-    // capture) moved to [[CorrectnessOnly]] shape 2 — pointer-jumping
-    // made the priced primary deep-graph-safe, ending the fallback's
-    // board role; its adjudication record stays at
-    // SCALE.md#adjudicated-q_neardup_components_star.
     "q_rule_matches" ->
       "SCALE.md#adjudicated-q_rule_matches (two intrinsically-different-key 600k exchanges - basket mining vs per-user sets - plus the pair/triple explosion CPU off a checkpoint feeding 4 consumers; ~18 jobs of floors; fluctuates 1.5-2.1x across captures)")
 
@@ -367,36 +362,18 @@ object Bench {
     * Membership contract — the exclusion must never hide a fixable
     * plan, and the excluded query's production-path sibling must be
     * (a) registered, (b) oracle-gated, and (c) priced on the board.
-    * Two admissible cost shapes:
-    *  1. cost intrinsic to PARITY SEMANTICS (not to the plan);
-    *  2. (r17) an ALTERNATIVE-ALGORITHM variant kept for robustness,
-    *     whose cost is intrinsic to that algorithm (adjudicated — every
-    *     fold tried, measured, reverted with record) and whose
-    *     production sibling prices the same operator on the SAME
-    *     oracle, so the operator itself never leaves the board.
+    * Admissible cost shape: cost intrinsic to PARITY SEMANTICS (not to
+    * the plan).
     * Members:
-    *  - q_cf_recommendations (shape 1): the reference sums over ALL
+    *  - q_cf_recommendations: the reference sums over ALL
     *    sim>0 partners (`collab_filter.py:67-72`); the scoring stream is
     *    ledger-adjudicated irreducible (SCALE.md). Priced sibling:
     *    q_cf_recommendations_topn (Collab.recommendTopNeighbors at the
     *    production neighborhood size, oracle-gated at its binding cap).
-    *  - q_neardup_components_star (shape 2, r17): the Kiveris
-    *    large-star/small-star fallback — 4 alternations × ~6 exchanges
-    *    = 48 AQE jobs, adjudicated floor-bound (the r16 union-fold was
-    *    tried, measured identical, reverted with record). Its
-    *    deep-graph rationale is now covered by the PRICED primary:
-    *    q_neardup_components' propagation loop gained adaptive
-    *    pointer-jumping (Dedup.connectedComponents, O(log diameter)
-    *    blocks — a 199-edge chain converges under the default cap,
-    *    spec-gated), so the star variant is a redundant-by-default
-    *    alternative retained for edge-heavy adversarial graphs where
-    *    shrinking the EDGE set beats label propagation. Same oracle as
-    *    the primary (componentsOracleSql) — the operator stays priced
-    *    at 1.20× via q_neardup_components (r17 capture).
     * Published in bench_details as "correctness_only" so the split is
     * auditable from the artifact alone. */
   val CorrectnessOnly: Set[String] =
-    Set("q_cf_recommendations", "q_neardup_components_star")
+    Set("q_cf_recommendations")
 
   def main(args: Array[String]): Unit = {
     // wall clock of the WHOLE capture (warm-ups included): the
@@ -499,7 +476,7 @@ object Bench {
         // session: a forced System.gc() between queries slowed every CF
         // query 20-30% — the full GC unloads generated classes and
         // forces re-JIT — and unpersist(blocking=true) measured no
-        // better than async; see tools/CfBisect + SCALE.md)
+        // better than async; see SCALE.md "Round-13 bisect")
         if (ok) Some(name -> Draw(dt, dj)) else None
     }.toMap
 
@@ -685,8 +662,8 @@ object Bench {
     // maximally self-warm. Pass-interleaved Spark draws are strictly
     // harsher: every draw pays the JVM-state debt of the ~166 queries
     // before it, and for alphabetically family-adjacent queries that
-    // debt is systematic (tools/CfBisect, drift-cancelled interleaved
-    // A/B: q_cf_recommendations min 4.96 s isolated vs 5.91 s after a
+    // debt is systematic (SCALE.md "Round-13 bisect", drift-cancelled
+    // interleaved A/B: q_cf_recommendations min 4.96 s isolated vs 5.91 s after a
     // q_cf_family draw, identical 19-job plan, GC pauses ≤ 0.16 s/draw
     // and a blocking-unpersist + 1 s drain does NOT remove it). So the
     // min-of-N comparison is only symmetric if substantial queries also
@@ -705,7 +682,7 @@ object Bench {
     // uncorroborated under the noise-scaled gate.
     // per-query interleaved minimum, snapshotted BEFORE the consecutive
     // stage (round-13 stretch ask: publish the pass-min beside the
-    // self-adjacent consecutive min so the CfBisect-measured JVM
+    // self-adjacent consecutive min so the bisect-measured JVM
     // adjacency tax is visible per query in every artifact)
     val passMin: Map[String, Double] = draws.collect {
       case (n, ds) if ds.nonEmpty => n -> ds.map(_.sec).min
@@ -946,8 +923,8 @@ object Bench {
     val justifiedJson = Justified.toSeq.sortBy(_._1).map { case (k, v) =>
       "\"" + k + "\":\"" + v + "\"" }.mkString("{", ",", "}")
     // interleaved vs self-adjacent minima per query (round-13 stretch
-    // ask: the +0.9 s pass-adjacency tax CfBisect measured on
-    // q_cf_recommendations is now self-diagnosing from the artifact —
+    // ask: the +0.9 s pass-adjacency tax the round-13 bisect measured
+    // on q_cf_recommendations is now self-diagnosing from the artifact —
     // pass_min ≫ consec_min IS the adjacency tax, visible per query)
     val passMinJson = full.collect {
       case (k, _) if sel.passMin.contains(k) =>
@@ -998,7 +975,7 @@ object Bench {
     // ever drop the tail): the driver's per-query round-over-round
     // comparison (PERF n_common) reads this line, and r17's 5-entry map
     // blinded it. The shrink loop is a safety rail only — the slim meta
-    // plus 181 entries is ~7 KB, and the r17 artifact proves the driver
+    // plus 180 entries is ~7 KB, and the r17 artifact proves the driver
     // parses lines of that order (see metaSlim note above).
     val top = secs.toSeq.sortBy(-_._2)
     var line =

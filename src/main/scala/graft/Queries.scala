@@ -4064,9 +4064,8 @@ object Queries {
   private def benchDocs(s: SparkSession, dir: String): DataFrame =
     t(s, dir).documents.where(col("doc_id") % 10 === 7)
 
-  /** Recursive-CTE min-reachable-id mirror over verified MinHash edges —
-    * shared by BOTH connected-components variants (propagation and
-    * star-contraction), which must agree exactly. */
+  /** Recursive-CTE min-reachable-id mirror over verified MinHash edges
+    * for q_neardup_components. */
   private def componentsOracleSql: String =
     s"""WITH src AS (SELECT doc_id, text FROM documents),
         $minhashJcSql,
@@ -4392,20 +4391,6 @@ object Queries {
     Spec("q_neardup_components",
       (s, dir) => Dedup.nearDupComponents(t(s, dir).documents,
         "doc_id", "text", 3, 0.05, 16, 4).orderBy(col("doc_id")),
-      Some(componentsOracleSql)),
-
-    // Same clusters via the large-star/small-star contraction
-    // (Kiveris SoCC'14, the deep-graph-safe variant) — must reproduce
-    // the propagation labelling EXACTLY, so it shares the same
-    // recursive-CTE oracle.
-    // CORRECTNESS-ONLY since r17 (Bench.CorrectnessOnly shape 2): the
-    // priced primary above gained adaptive pointer-jumping, ending this
-    // fallback's board role; the Verify/DuckDB gate still runs it every
-    // round. Adjudication: SCALE.md#adjudicated-q_neardup_components_star.
-    Spec("q_neardup_components_star",
-      (s, dir) => Dedup.nearDupComponents(t(s, dir).documents,
-        "doc_id", "text", 3, 0.05, 16, 4, algorithm = "star")
-        .orderBy(col("doc_id")),
       Some(componentsOracleSql)),
 
     // ----------------------------------- per-source rate mixing (downsample)

@@ -161,7 +161,7 @@ object AssociationRules {
     * codegen) and slice/size are ordinary codegen expressions, so this
     * shape stays inside whole-stage codegen end to end. Measured
     * bit-identical (count + xxhash64 checksum) and 12–29% faster on
-    * both registered grains (tools.ExplodeBench, sf0.1 min-of-4:
+    * both registered grains (OPTIMIZATION_r17 §2, sf0.1 min-of-4:
     * partkey pairs 0.687→0.605 s, brand triples 0.617→0.437 s). */
   private def explodePairs(baskets: DataFrame): DataFrame =
     baskets
@@ -327,7 +327,7 @@ object AssociationRules {
     * triples and count — the 3-item analogue of [[explodePairs]], same
     * codegen'd array-lambda shape. Size-2 baskets contribute nothing. */
   // chained generators for the same codegen reason as [[explodePairs]]
-  // (tools.ExplodeBench: bit-identical, 23–29% faster at sf0.1); the
+  // (OPTIMIZATION_r17 §2: bit-identical, 23–29% faster at sf0.1); the
   // 1-based slice offsets preserve the exact a<b<c position enumeration
   // of the old nested-lambda form
   private def explodeTriples(baskets: DataFrame): DataFrame =

@@ -131,25 +131,33 @@ object Collab {
     *    any item exceeds the cap, naming the hottest item and the exact
     *    alternatives ([[userSimilaritiesDimsum]] — provable error
     *    bounds — or `maxItemUsers = None` exact mode).
-    * System property first so specs can set it per-JVM; env for
-    * deployments. Production guidance in SCALE.md ("CF hot-item cap
+    * Set per session as [[CapModeConf]] (`spark-submit --conf` for
+    * deployments). Production guidance in SCALE.md ("CF hot-item cap
     * contract"). */
-  def capMode: String =
-    sys.props.getOrElse("graft.cf.cap.mode",
-      sys.env.getOrElse("GRAFT_CF_CAP_MODE", "warn"))
+  val CapModeConf = "spark.graft.cf.capMode"
+
+  /** [[CapModeConf]] of `spark`, parsed strictly: anything but `warn`
+    * or `fail` throws instead of falling back to the default. */
+  def capMode(spark: org.apache.spark.sql.SparkSession): String =
+    spark.conf.getOption(CapModeConf).getOrElse("warn") match {
+      case m @ ("warn" | "fail") => m
+      case other => throw new IllegalArgumentException(
+        s"$CapModeConf must be warn or fail, got '$other'")
+    }
 
   private def cappedBase(counts: DataFrame, maxItemUsers: Option[Int],
                          applyFilter: Boolean = true)
       : DataFrame = {
     val iu = counts.groupBy(col("i")).agg(count(lit(1)).as("iu"))
-    maxItemUsers.filter(_ => capMode == "fail").foreach { cap =>
+    val mode = capMode(counts.sparkSession)
+    maxItemUsers.filter(_ => mode == "fail").foreach { cap =>
       val hot = iu.where(col("iu") > cap)
         .agg(count(lit(1)).as("n_hot"),
           coalesce(max(col("iu")), lit(0L)).as("max_iu")).head()
       require(hot.getLong(0) == 0L,
         s"CF hot-item cap $cap is BINDING (${hot.getLong(0)} items over " +
           s"the cap, hottest held by ${hot.getLong(1)} users) and " +
-          "graft.cf.cap.mode=fail: refusing to compute approximate " +
+          s"$CapModeConf=fail: refusing to compute approximate " +
           "similarities. Use userSimilaritiesDimsum (sampled, provable " +
           "error bounds), maxItemUsers = None (exact), or raise the cap.")
     }
@@ -810,19 +818,7 @@ object Collab {
     * class scaladoc. */
   def cfFamily(counts0: DataFrame, rules: DataFrame, k: Int, alpha: Double,
                userFilter: Column => Column,
-               simsLimit: Int = 1000,
-               // threaded to [[userSimilarities]] (the family's one
-               // pair-explosion site) so the skew A/B harness
-               // (tools.SkewBench, r16 judge ask #5) can price the
-               // family capped vs uncapped; production callers keep the
-               // default
-               maxItemUsers: Option[Int] = Some(DefaultMaxItemUsers),
-               // measurement seam (tools.CfTailBench): `false` restores
-               // the pre-r18 SortMergeJoin anti-join shape so the
-               // broadcast-anti change can be A/B'd in one JVM;
-               // production callers keep the default
-               antiBroadcast: Boolean = true)
-      : DataFrame = {
+               simsLimit: Int = 1000): DataFrame = {
     // eager materialization: consumed by the similarity sides, norms,
     // iu, the scoring join, the purchased anti-join and the assoc side.
     // Callers should pin the aggregation width upstream (repartition by
@@ -830,7 +826,7 @@ object Collab {
     // see the q_cf_family registration) so the checkpoint lands at full
     // parallelism.
     val counts = counts0.localCheckpoint(true)
-    val sims = userSimilarities(counts, maxItemUsers)
+    val sims = userSimilarities(counts, Some(DefaultMaxItemUsers))
     // rounding happens BEFORE the top-N, matching q_cf_user_sims (ties
     // on rounded cosine break on the unique ordered pair key)
     val simsFam = sims
@@ -861,7 +857,7 @@ object Collab {
     //     critical path (~21 vs ~16 s warm on the same box). This
     //     re-confirms the r11 adjudication post-codegen.
     val scored = scoreCandidates(counts, sims, userFilter(col("u1")),
-      antiFilter = if (antiBroadcast) Some(userFilter) else None)
+      antiFilter = Some(userFilter))
     val recs = scored
       .withColumn("rn", row_number().over(
           Window.partitionBy(col("u"))
@@ -900,19 +896,10 @@ object Collab {
     * registered consumers (cfFamily, the hybrid query) filter to
     * targets; for an all-users blend drop the broadcast hints and let
     * AQE pick the join. */
-  /** `cfMaxOpt` (r18): a caller that has ALREADY ranked the CF
-    * candidates per user (the family's top-k window) can hand the
-    * per-user max in as a (u, __cmax) frame instead of letting the
-    * blend re-aggregate it — the rank-1 row's score under
-    * (score DESC, i ASC) IS max(score), bit-identically, and the
-    * aggregate here was the third full re-read + re-aggregation of the
-    * scoring exchange in the family plan (guide §2.4: two operations
-    * keyed the same way should share one pass). */
   def hybridBlend(assoc: DataFrame, cf: DataFrame, alpha: Double,
-                  k: Int, cfMaxOpt: Option[DataFrame] = None): DataFrame = {
+                  k: Int): DataFrame = {
     val anMax = assoc.groupBy(col("u")).agg(max(col("score")).as("__amax"))
-    val cnMax = cfMaxOpt.getOrElse(
-      cf.groupBy(col("u")).agg(max(col("score")).as("__cmax")))
+    val cnMax = cf.groupBy(col("u")).agg(max(col("score")).as("__cmax"))
     val an = assoc.join(broadcast(anMax), Seq("u"))
       .select(col("u"), col("i"), (col("score") / col("__amax")).as("a_score"))
     val cn = cf.join(broadcast(cnMax), Seq("u"))

@@ -172,21 +172,16 @@ object Dedup {
     * the symmetrised edge list) + one min-agg; the shortcut is one
     * node-grain self-join of the label frame; `localCheckpoint`
     * truncates the growing lineage so block N's plan does not replay
-    * blocks 1..N−1. The large-star/small-star alternation
-    * ([[connectedComponentsStar]], Kiveris et al., "Connected Components
-    * in MapReduce", SoCC'14) remains as the edge-rewriting alternative
-    * (it shrinks the EDGE set as it runs, which can win when the edge
-    * frame dwarfs the label frame).
+    * blocks 1..N−1. A deeper graph needs a larger `maxIter`, never a
+    * second algorithm: the large-star/small-star edge-rewriting
+    * alternative (Kiveris et al., SoCC'14) was measured and retired
+    * (SCALE.md "Star-contraction retirement").
     *
     * `nodes`: one column `id`; `edges`: columns `id_a`, `id_b`
     * (undirected, need not be deduplicated). Returns (id, component)
     * where component = min node id reachable. */
   def connectedComponents(nodes: DataFrame, edges: DataFrame,
-                          maxIter: Int = 20,
-                          // measurement seam (tools.CcBench A/Bs plain
-                          // propagation against adaptive doubling on the
-                          // scale fixtures); production callers keep it on
-                          doubling: Boolean = true): DataFrame = {
+                          maxIter: Int = 20): DataFrame = {
     val sym = edges.select(col("id_a").as("id"), col("id_b").as("nbr"))
       .unionByName(edges.select(col("id_b").as("id"), col("id_a").as("nbr")))
       .localCheckpoint()
@@ -247,8 +242,8 @@ object Dedup {
       // than any LSH near-dup cluster measured at 1× or 10×) engages
       // the shortcut, after which radius multiplies ~4× per block and
       // the block count is O(log d). The threshold is a same-day
-      // MEASURED decision (tools.CcBench, r17): engaging at block 2
-      // cost +5–7 AQE jobs and ~+20% wall at the 10× fixture (57–59
+      // MEASURED decision (r17, SCALE.md "Pointer-jumping in propagation
+      // CC"): engaging at block 2 cost +5–7 AQE jobs and ~+20% wall at the 10× fixture (57–59
       // jobs / 9.1 s vs 52 / 7.5 s plain) and ~+10% at 1× — at those
       // diameters block 2 converges either way, so the shortcut's two
       // node-grain self-joins bought nothing. Engaging at block 3 is
@@ -257,7 +252,7 @@ object Dedup {
       // (CurationSpec gates this under the default cap).
       def step(l: DataFrame): DataFrame = {
         val r = round(l)
-        if (doubling && iter >= 6) shortcut(r) else r
+        if (iter >= 6) shortcut(r) else r
       }
       val l1 = step(labels)
       val l2 = step(l1)
@@ -277,114 +272,8 @@ object Dedup {
     // or a bug, and the labels are NOT a fixpoint, so fail loudly
     if (!converged) throw new IllegalStateException(
       s"connectedComponents: no fixpoint after $maxIter rounds — graph " +
-        "diameter exceeds the doubling iteration cap; raise maxIter or " +
-        "use connectedComponentsStar")
+        "diameter exceeds the doubling iteration cap; raise maxIter")
     labels
-  }
-
-  /** Connected components by the large-star/small-star alternation
-    * (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    * SoCC'14) — O(log² n) rounds worst-case (O(log n) in practice)
-    * regardless of graph diameter, where [[connectedComponents]]'s label
-    * propagation needs diameter rounds. Use this variant when components
-    * can be long chains (entity-resolution graphs, web link graphs);
-    * both produce the identical min-id labelling.
-    *
-    * Each round rewrites the edge set:
-    *  - LARGE-STAR: for every node u, connect every strictly-LARGER
-    *    neighbour v > u to u's current minimum neighbour m(u) —
-    *    `(v, min(m(u), u))`. Edges only ever point further "downhill",
-    *    so the star centres sink toward component minima.
-    *  - SMALL-STAR: connect u itself and every smaller-or-equal
-    *    neighbour to m(u) — flattening chains into stars.
-    * The component is converged when every edge already points at its
-    * component's minimum: the edge multiset stops changing (detected by
-    * an exact count + checksum probe, one agg scan). */
-  def connectedComponentsStar(nodes: DataFrame, edges: DataFrame,
-                              maxIter: Int = 50): DataFrame = {
-    def canon(df: DataFrame): DataFrame = df
-      .where(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("src"),
-        least(col("src"), col("dst")).as("dst"))
-      .distinct()
-    // probe: (count, sum src·3+dst) — exact decimals, order-free; equal
-    // probes across a round ⇒ the canonical edge set reached fixpoint
-    // (edges only ever rewrite toward smaller dst, so no oscillation)
-    def probe(df: DataFrame): (Long, java.math.BigDecimal) = {
-      val r = df.agg(count(lit(1)).as("n"),
-        coalesce(sum((col("src") * 3 + col("dst")).cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("s")).head()
-      (r.getLong(0), r.getDecimal(1))
-    }
-    // One large-star + small-star alternation over a canonical edge set.
-    def alternate(cur: DataFrame): DataFrame = {
-      // LARGE-STAR — over the symmetric view: for node u with neighbours
-      // N(u), every v ∈ N(u) with v > u is re-pointed at
-      // m = min(N(u) ∪ {u})
-      val nbrs = cur.select(col("src").as("u"), col("dst").as("v"))
-        .unionByName(cur.select(col("dst").as("u"), col("src").as("v")))
-      val mAll = nbrs.groupBy(col("u")).agg(min(col("v")).as("mv"))
-      val largeStar = nbrs.join(mAll, Seq("u"))
-        .where(col("v") > col("u"))
-        .select(col("v").as("src"), least(col("mv"), col("u")).as("dst"))
-      // no mid-round checkpoint: canon ends in a distinct (an Exchange),
-      // so the two small-star consumers share it via ReuseExchange inside
-      // the job; lineage stays bounded because `cur` is at most two
-      // alternations above a checkpointed scan.
-      // (r16 judge ask #8 experiment, measured and REVERTED: dropping
-      // this canon is semantically legal — large-star output is strictly
-      // oriented and the small-star MINs are duplicate-insensitive, the
-      // union-find property stayed green — but it removed the shared
-      // materialization, so both small-star consumers re-derived the
-      // large-star chain: 48 jobs and ~6.2 s either way at sf0.1. The
-      // dedup-everywhere form keeps the smaller intermediate frames.)
-      val afterLarge = canon(largeStar)
-      // SMALL-STAR — canonical edges already key each edge by its larger
-      // endpoint (src > dst): for node u = src with smaller neighbours
-      // N⁻(u) = {dst}, every v ∈ N⁻(u) ∪ {u} is re-pointed at
-      // m = min(N⁻(u)) (self-loops (m, m) are dropped by canon)
-      val mSmall = afterLarge.groupBy(col("src")).agg(min(col("dst"))
-        .as("m"))
-      val smallStar = afterLarge.join(mSmall, Seq("src"))
-        .select(col("dst").as("src"), col("m").as("dst"))
-        .unionByName(mSmall.select(col("src"), col("m"))
-          .toDF("src", "dst"))
-      canon(smallStar)
-    }
-    // TWO alternations per job with a fused probe (the
-    // [[connectedComponents]] trick): edges rewrite monotonically toward
-    // smaller dst, so probe(a1) == probe(a2) proves a1 was already the
-    // fixpoint, making a2 (= a1) the answer — both probes ride ONE
-    // action, and star contraction's 1–2-extra-round burn-in means the
-    // paired job halves the job count on typical near-dup graphs.
-    var cur = canon(edges.select(col("id_a").as("src"),
-      col("id_b").as("dst"))).localCheckpoint(false)
-    var iter = 0
-    var done = probe(cur)._1 == 0L
-    while (!done && iter < maxIter) {
-      val a1 = alternate(cur)
-      val a2 = alternate(a1).localCheckpoint(false)
-      val r = a2.agg(count(lit(1)).as("n2"),
-          coalesce(sum((col("src") * 3 + col("dst"))
-            .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")).as("s2"))
-        .crossJoin(a1.agg(count(lit(1)).as("n1"),
-          coalesce(sum((col("src") * 3 + col("dst"))
-            .cast("decimal(38,0)")), lit(0).cast("decimal(38,0)")).as("s1")))
-        .head()
-      done = r.getLong(0) == r.getLong(2) &&
-        r.getDecimal(1).compareTo(r.getDecimal(3)) == 0
-      cur = a2
-      iter += 2
-    }
-    if (!done) throw new IllegalStateException(
-      s"connectedComponentsStar: edge set still changing after $maxIter " +
-        "star rounds — labels would be unconverged (wrong); raise maxIter")
-    // at fixpoint every surviving edge is (member, component-min)
-    nodes.select(col("id"))
-      .join(cur.select(col("src").as("id"), col("dst").as("component")),
-        Seq("id"), "left_outer")
-      .select(col("id"),
-        coalesce(col("component"), col("id")).as("component"))
   }
 
   /** Near-duplicate clusters over the corpus, the SlimPajama-style shape:
@@ -395,18 +284,11 @@ object Dedup {
     * dedup, unlike [[dedupCorpus]]'s greedy pairwise drop. */
   def nearDupComponents(docs: DataFrame, id: String, content: String,
                         shingleLen: Int = 3, minJaccard: Double = 0.5,
-                        numHashes: Int = 16, bandSize: Int = 4,
-                        algorithm: String = "propagation"): DataFrame = {
+                        numHashes: Int = 16, bandSize: Int = 4): DataFrame = {
     val edges = NearDup.minHashPortableUnsorted(docs, id, content, shingleLen,
       minJaccard, numHashes, bandSize).select(col("id_a"), col("id_b"))
-    val nodes = docs.select(col(id).as("id"))
-    val labels = algorithm match {
-      case "propagation" => connectedComponents(nodes, edges)
-      case "star"        => connectedComponentsStar(nodes, edges)
-      case other => throw new IllegalArgumentException(
-        s"nearDupComponents: unknown algorithm '$other'")
-    }
-    labels.select(col("id").as(id), col("component"))
+    connectedComponents(docs.select(col(id).as("id")), edges)
+      .select(col("id").as(id), col("component"))
   }
 
   /** Paragraph-level exact dedup (the Dolma/RefinedWeb line-dedup stage):

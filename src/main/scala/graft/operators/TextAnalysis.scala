@@ -24,7 +24,7 @@ object TextAnalysis {
     * non-whitespace runs, so "token == stopword" is the anchored
     * alternation `(?<!\S)(?:the|a|…)(?!\S)` and the count is one
     * `regexp_count` (ordinary codegen). Null-in → null-out either way.
-    * Bit-identical on the corpus (tools.TextFnBench) and ~29% faster at
+    * Bit-identical on the corpus (OPTIMIZATION_r18 §6) and ~29% faster at
     * the sf0.1 grain; oracle-gated in every consumer. */
   private def stopwordCount(text: Column): Column =
     regexp_count(text,
@@ -35,10 +35,10 @@ object TextAnalysis {
     * codegen rewrite of `size(filter(stopArr, sw =>
     * array_contains(words, sw)))`, which not only ran interpreted (HOF)
     * but re-evaluated the `split` inside the lambda once per stopword
-    * (16 splits per document — tools.TextFnBench measured it as the
+    * (16 splits per document — OPTIMIZATION_r18 §6 measured it as the
     * most expensive text shape, 0.60 s at the sf0.1 grain). One split +
     * one set intersection (`array_intersect` returns the distinct
-    * common elements) is bit-identical (TextFnBench, 5000-doc corpus)
+    * common elements) is bit-identical (5000-doc corpus, same record)
     * and 5× faster (0.12 s). The null guard mirrors the HOF, where a
     * null-text predicate drops every stopword → 0. */
   private def distinctStopwordHits(text: Column): Column =
@@ -50,7 +50,7 @@ object TextAnalysis {
     * rewrite of `size(filter(words, w => w.rlike("[A-Za-z]")))`: one
     * match per qualifying token (the lazy `\S*?` stops at the first
     * letter; the `(?<!\S)` anchor forbids a second match inside the
-    * same token). Bit-identical (TextFnBench) and ~12% faster. */
+    * same token). Bit-identical (OPTIMIZATION_r18 §6) and ~12% faster. */
   private def alphaWordCount(text: Column): Column =
     regexp_count(text, lit("(?<!\\S)\\S*?[A-Za-z]")).cast("long")
 
@@ -67,7 +67,7 @@ object TextAnalysis {
     * reproduces the blank/empty-document case, where
     * `split(trim(t), "\s+")` yields `[""]` and the old fold counted 1;
     * the `when` preserves null-in → null-out. Bit-identical on the
-    * corpus (tools.TextFnBench, count + Σ xxhash64 per doc) and ~19%
+    * corpus (OPTIMIZATION_r18 §6, count + Σ xxhash64 per doc) and ~19%
     * faster at the sf0.1 grain; oracle-gated in every consumer. */
   def tokenCountEstimate(text: Column): Column =
     when(text.isNull, lit(null).cast("long"))

@@ -73,10 +73,6 @@ class CurationSpec extends SparkSpec {
       Dedup.connectedComponents(nodes, chain, maxIter = 3).collect()
     }
     assert(e1.getMessage.contains("no fixpoint"))
-    val e2 = intercept[IllegalStateException] {
-      Dedup.connectedComponentsStar(nodes, chain, maxIter = 1).collect()
-    }
-    assert(e2.getMessage.contains("unconverged"))
     // the default cap converges on the same input: blocks 1-2 are plain
     // propagation (radius 6), every later block interleaves the
     // pointer-jumping shortcut (radius ~4x per block), so the 29-edge
@@ -101,22 +97,6 @@ class CurationSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(comp.size === 200)
     assert(comp.values.forall(_ === 0L))
-  }
-
-  test("star-contraction CC collapses a 60-node chain (deep-graph case)") {
-    val n = 60L
-    val nodes = (0L until n).toDF("id")
-    val chain = (0L until n - 1).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponentsStar(nodes, chain)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(comp.values.forall(_ === 0L)) // one component, min id 0
-    // two components + an isolated node
-    val two = Seq((0L, 1L), (1L, 2L), (10L, 11L)).toDF("id_a", "id_b")
-    val c2 = Dedup.connectedComponentsStar(
-      Seq(0L, 1L, 2L, 10L, 11L, 50L).toDF("id"), two)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(c2 === Map(0L -> 0L, 1L -> 0L, 2L -> 0L,
-      10L -> 10L, 11L -> 10L, 50L -> 50L))
   }
 
   test("nearDupComponents clusters the planted near-dups transitively") {

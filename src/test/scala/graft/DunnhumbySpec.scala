@@ -309,9 +309,7 @@ class DunnhumbySpec extends SparkSpec {
     val tx = Seq((1L, 100L), (2L, 100L), (3L, 100L),
       (1L, 200L), (2L, 200L), (3L, 300L)).toDF("cust", "item")
     val counts = Collab.userItemCounts(tx, "cust", "item")
-    val prev = sys.props.get("graft.cf.cap.mode")
-    try {
-      sys.props("graft.cf.cap.mode") = "fail"
+    withConf(Collab.CapModeConf, "fail") {
       val e = intercept[IllegalArgumentException] {
         Collab.userSimilarities(counts, Some(2))
       }
@@ -324,10 +322,20 @@ class DunnhumbySpec extends SparkSpec {
       val exact = Collab.userSimilarities(counts, None)
         .orderBy("u1", "u2").collect()
       assert(capped.toSeq === exact.toSeq)
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.cf.cap.mode") = v
-        case None => sys.props.remove("graft.cf.cap.mode")
+    }
+  }
+
+  test("an invalid CF cap mode conf fails loudly instead of silently " +
+      "taking the default") {
+    val counts = Collab.userItemCounts(
+      Seq((1L, 100L), (2L, 100L)).toDF("cust", "item"), "cust", "item")
+    Seq("FAIL", "fial", "1").foreach { v =>
+      withConf(Collab.CapModeConf, v) {
+        val e = intercept[IllegalArgumentException] {
+          Collab.userSimilarities(counts, Some(2))
+        }
+        assert(e.getMessage.contains(s"${Collab.CapModeConf} must be"))
+        assert(e.getMessage.contains(s"got '$v'"))
       }
     }
   }

@@ -282,20 +282,18 @@ object InvariantsCheck extends Properties("graft.invariants") {
       }
     }
 
-  property("connectedComponents (propagation AND star) match union-find") =
+  property("connectedComponents matches union-find") =
     forAll(for {
       n <- Gen.choose(1, 12)
       edges <- Gen.listOf(for {
         a <- Gen.choose(0L, n.toLong - 1)
         b <- Gen.choose(0L, n.toLong - 1)
       } yield (a, b))
-      star <- Gen.oneOf(true, false)
-    } yield (n, edges, star)) { case (n, rawEdges, star) =>
+    } yield (n, edges)) { case (n, rawEdges) =>
       // self-loops are legal input; they must not affect components
       val nodes = (0L until n.toLong).toDF("id")
       val edges = rawEdges.toDF("id_a", "id_b")
-      val got = (if (star) Dedup.connectedComponentsStar(nodes, edges)
-        else Dedup.connectedComponents(nodes, edges))
+      val got = Dedup.connectedComponents(nodes, edges)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       // reference: plain union-find with min-label roots
       val parent = Array.tabulate(n)(identity)

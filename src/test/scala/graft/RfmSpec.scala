@@ -82,34 +82,35 @@ class RfmSpec extends SparkSpec {
       (1 to (c / 8 + 1)).map(b =>
         (c.toLong, c * 100L + b, 5.0 * ((c % 3) + 1), 700 - (c % 4) * 10))
     }.toDF("household_key", "basket_id", "sales_value", "day")
-    def run(distributed: Boolean) = {
-      val prev = sys.props.get("graft.rfm.ntile.distributed")
-      try {
-        sys.props("graft.rfm.ntile.distributed") = distributed.toString
+    def run(distributed: Boolean) =
+      withConf(Rfm.NtileDistributedConf, distributed.toString) {
         Rfm.scores(txTies, "household_key", "basket_id", "sales_value",
           "day").orderBy($"customer").collect().toSeq
-      } finally prev match {
-        case Some(v) => sys.props("graft.rfm.ntile.distributed") = v
-        case None => sys.props.remove("graft.rfm.ntile.distributed")
       }
-    }
     val persisted = spark.sparkContext.getPersistentRDDs.keySet
     assert(run(distributed = true) === run(distributed = false))
     // the distributed backend releases its base cache before returning
     assert(spark.sparkContext.getPersistentRDDs.keySet.subsetOf(persisted))
     // and on the tiny original fixture (n = 10 < bucket count edge is
     // covered by InvariantsCheck-style small n: 10 rows, 5 buckets)
-    def runTx(distributed: Boolean) = {
-      val prev = sys.props.get("graft.rfm.ntile.distributed")
-      try {
-        sys.props("graft.rfm.ntile.distributed") = distributed.toString
+    def runTx(distributed: Boolean) =
+      withConf(Rfm.NtileDistributedConf, distributed.toString) {
         Rfm.scores(tx, "household_key", "basket_id", "sales_value",
           "day").orderBy($"customer").collect().toSeq
-      } finally prev match {
-        case Some(v) => sys.props("graft.rfm.ntile.distributed") = v
-        case None => sys.props.remove("graft.rfm.ntile.distributed")
+      }
+    assert(runTx(distributed = true) === runTx(distributed = false))
+  }
+
+  test("an invalid ntile backend conf fails loudly instead of silently " +
+      "taking the default") {
+    Seq("TRUE", "1", "ture").foreach { v =>
+      withConf(Rfm.NtileDistributedConf, v) {
+        val e = intercept[IllegalArgumentException] {
+          Rfm.scores(tx, "household_key", "basket_id", "sales_value", "day")
+        }
+        assert(e.getMessage.contains(s"${Rfm.NtileDistributedConf} must be"))
+        assert(e.getMessage.contains(s"got '$v'"))
       }
     }
-    assert(runTx(distributed = true) === runTx(distributed = false))
   }
 }

@@ -15,21 +15,8 @@ class SinksAndMlSpec extends SparkSpec {
     assert(out.toSeq == Seq((1L, "old"), (2L, "new"), (3L, "new")))
   }
 
-  test("lakehouse MERGE seam: vanilla build takes the anti-join path " +
-      "unchanged, and the reflective pieces are well-formed") {
-    import graft.sources.LakehouseMerge
-    // pin the build shape: delta-spark must NOT be on this classpath —
-    // if it ever appears, upsertAt silently changes engine and this
-    // build's q_upsert gate no longer covers it
-    assert(!LakehouseMerge.available(),
-      "vanilla build unexpectedly sees io.delta.tables.DeltaTable")
-    assert(!LakehouseMerge.isDeltaTable(spark, "/tmp/nonexistent"))
-    // the ON condition mirrors the anti-join's EqualTo per key
-    assert(LakehouseMerge.mergeCondition(Seq("k")) == "t.`k` = s.`k`")
-    assert(LakehouseMerge.mergeCondition(Seq("a", "b")) ==
-      "t.`a` = s.`a` AND t.`b` = s.`b`")
-    assertThrows[IllegalArgumentException](
-      LakehouseMerge.mergeCondition(Nil))
+  test("upsertAt on a parquet path rewrites it to the upsert() result " +
+      "and clears its swap directory") {
     // path-level upsert on a parquet dir = the oracle-gated upsert()
     val dir = java.nio.file.Files.createTempDirectory("graftups").toString
     Seq((1L, "old"), (2L, "old")).toDF("k", "src")

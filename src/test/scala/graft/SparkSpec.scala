@@ -22,4 +22,15 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
   import scala.language.implicitConversions
   protected def sql(q: String) = spark.sql(q)
+
+  /** Runs `body` with session conf `key` set to `value`, then restores
+    * the previous setting (or unsets it) whatever `body` does. */
+  protected def withConf[T](key: String, value: String)(body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
