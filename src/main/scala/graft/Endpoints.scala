@@ -67,23 +67,15 @@ object Endpoints {
 
   /** Customer-detail hybrid recommendations
     * (`customers/views.py:49-183`): CF scores blended with
-    * association-rule scores. */
+    * association-rule scores for the `targetUsers` households
+    * ([[Collab.hybridRecommendDirect]]). The predicate must be selective
+    * — see `Collab.directedSimilarities`' broadcast CONTRACT. */
   def hybridRecommendations(tx: DataFrame, user: String, item: String,
                             basket: String, alpha: Double, topN: Int,
-                            targetUsers: Column => Column = _ => lit(true))
-      : DataFrame = {
-    val counts = Collab.userItemCounts(tx, user, item)
-    // the same user predicate restricts BOTH sources: the directed CF path
-    // keys targets as the self-join's left side; assocScores keys them as
-    // u — applying it to only one side would blend a filtered CF list
-    // against all-user assoc scores
-    val cf = Collab.scoreCandidatesDirect(counts, targetUsers)
-    val rules = AssociationRules.rulesRaw(tx, basket, item,
-      AssociationRules.Params(0.0, 0.0))
-    val assoc = Collab.assocScores(
-      counts.where(targetUsers(col("u"))), rules)
-    Collab.hybridBlend(assoc, cf, alpha, topN)
-  }
+                            targetUsers: Column => Column): DataFrame =
+    Collab.hybridRecommendDirect(Collab.userItemCounts(tx, user, item),
+      AssociationRules.rulesRaw(tx, basket, item,
+        AssociationRules.Params(0.0, 0.0)), targetUsers, alpha, topN)
 
   /** EP-6 `POST /analysis/api/ml/train/` full zoo
     * (`views.py:3209-3339` → `ml_models.py:509-596`): train every

@@ -6,18 +6,17 @@ import org.apache.spark.sql.SparkSession
 
 import scala.collection.mutable
 
-/** Times a single registered query (optionally printing its formatted
-  * plan) — the per-query drill-down companion to [[Bench]] — and prints a
-  * STAGE LEDGER: one row per completed Spark stage with wall seconds,
-  * task count, shuffle read/write rows and bytes, and input bytes, plus
-  * the job count. The ledger is how a >2×-of-oracle query gets its
-  * seconds attributed: either to a removable plan cost (a stage that
-  * shuffles too much / shouldn't exist) or to the ~0.3–0.5 s per-job
-  * scheduling floor × job count (irreducible in local mode, vanishes at
-  * cluster scale).
+/** Times a single registered query — the per-query drill-down companion
+  * to [[Bench]] — and prints a STAGE LEDGER: one row per completed Spark
+  * stage with wall seconds, task count, shuffle read/write rows and
+  * bytes, and input bytes, plus the job count. The ledger is how a
+  * >2×-of-oracle query gets its seconds attributed: either to a removable
+  * plan cost (a stage that shuffles too much / shouldn't exist) or to the
+  * ~0.3–0.5 s per-job scheduling floor × job count (irreducible in local
+  * mode, vanishes at cluster scale). For the query's formatted physical
+  * plan, run [[graft.tools.PlanDump]].
   *
   * Usage: `runMain graft.Profile <query_name> [sfDir]`; env knobs:
-  *  - `GRAFT_EXPLAIN=1` dumps the formatted physical plan
   *  - `GRAFT_REPS=n` runs n times (warm-cache timings; ledger printed
   *    for the LAST rep only, the JIT-warm one)
   *  - `GRAFT_CLEARCACHE=1` clears the catalog cache between reps
@@ -103,7 +102,6 @@ object Profile {
       ledger.clear()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)
-      if (sys.env.contains("GRAFT_EXPLAIN") && i == 1) df.explain("formatted")
       val n = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
       println(f"[profile] $name rep $i: $n rows in $dt%.2f s " +

@@ -1401,12 +1401,10 @@ object Queries {
             s.sparkContext.defaultParallelism,
             col("o_custkey"), col("l_partkey")),
           "o_custkey", "l_partkey").localCheckpoint(true)
-        val cf = Collab.scoreCandidatesDirect(counts, u => u % 50 === 0)
         val rules = AssociationRules.rulesRaw(t(s, dir).lineitem,
           "l_orderkey", "l_partkey", rulesParams)
-        val assoc = Collab.assocScores(
-          counts.where(col("u") % 50 === 0), rules)
-        Collab.hybridBlend(assoc, cf, 0.6, 5).orderBy(col("u"), col("rn"))
+        Collab.hybridRecommendDirect(counts, rules, u => u % 50 === 0, 0.6, 5)
+          .orderBy(col("u"), col("rn"))
       },
       Some("""WITH """ + cfSimsSql + """,
         sym AS (SELECT u1, u2, cos FROM sims

@@ -46,10 +46,6 @@ object ColumnFns {
   def pctChange(recent: Column, prev: Column): Column =
     when(prev =!= 0, (recent - prev) / prev * 100).otherwise(lit(0.0))
 
-  /** F10 — share of total, rounded (`views.py:1615-1624`). */
-  def shareOfTotal(x: Column, total: Column, scale: Int = 2): Column =
-    when(total =!= 0, round(x / total * 100, scale)).otherwise(lit(0.0))
-
   /** F14 / P7 — four-band risk labeling from a probability
     * (`views.py:1492-1503`, `customers/views.py:264-276`). */
   def riskBand(p: Column): Column =

@@ -46,8 +46,6 @@ object Ann {
   def nativeDot(a: Column, b: Column): Column =
     call_function("fvec_dot", a, b)
 
-  def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
   /** (id, v, nrm): float-array embedding with its L2 norm, computed once
     * per vector so the per-pair work in the joins below is a single native
     * dot + divide. */

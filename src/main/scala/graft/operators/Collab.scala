@@ -103,25 +103,6 @@ object Collab {
         })
     }
 
-  /** Shared prep for the similarity self-joins: cap-filtered (u, i, c)
-    * vectors with the per-user norm attached and single-user items pruned
-    * from the JOIN sides. Norms are computed over the full (capped)
-    * vectors BEFORE the iu ≥ 2 prune — an item only one user holds
-    * contributes to that user's denominator but can never produce a
-    * cross-user pair, so pruning it from the sides drops pure join
-    * fan-in at zero semantic cost. The iu frame is item-grain (catalog-
-    * sized), broadcastable by construction. */
-  /** Cap-filtered (u, i, c, iu) vectors — map-only over `counts` (the iu
-    * frame is item-grain, broadcastable by construction, and the cap
-    * observe rides IT, not the row-grain joined frame: Σ iu over capped
-    * items counts exactly the (u, i) rows the filter drops, and a
-    * CollectMetrics node on the big frame measured ~1.3 s per consumer
-    * at sf0.1 — it splits the codegen span and re-executes once per
-    * join side). */
-  /** `applyFilter = false` keeps the above-cap rows (still carrying
-    * their `iu`) for callers that need the raw vectors AND the cap
-    * metadata off one frame ([[recommendTopNeighbors]]); the observe
-    * node still reports a binding cap either way. */
   /** Cap enforcement mode (r17 judge ask #6 — "a binding cap changes
     * declared results without failing anything at 100 TB"):
     *  - `warn` (default): a binding cap logs a WARN via the observe
@@ -145,6 +126,18 @@ object Collab {
         s"$CapModeConf must be warn or fail, got '$other'")
     }
 
+  /** Cap-filtered (u, i, c, iu) vectors — map-only over `counts` (the iu
+    * frame is item-grain, broadcastable by construction, and the cap
+    * observe rides IT, not the row-grain joined frame: Σ iu over capped
+    * items counts exactly the (u, i) rows the filter drops, and a
+    * CollectMetrics node on the big frame measured ~1.3 s per consumer
+    * at sf0.1 — it splits the codegen span and re-executes once per
+    * join side).
+    *
+    * `applyFilter = false` keeps the above-cap rows (still carrying
+    * their `iu`) for callers that need the raw vectors AND the cap
+    * metadata off one frame ([[recommendTopNeighbors]]); the observe
+    * node still reports a binding cap either way. */
   private def cappedBase(counts: DataFrame, maxItemUsers: Option[Int],
                          applyFilter: Boolean = true)
       : DataFrame = {
@@ -177,6 +170,14 @@ object Collab {
     }
   }
 
+  /** Shared prep for the similarity self-joins: cap-filtered (u, i, c)
+    * vectors with the per-user norm attached and single-user items pruned
+    * from the JOIN sides. Norms are computed over the full (capped)
+    * vectors BEFORE the iu ≥ 2 prune — an item only one user holds
+    * contributes to that user's denominator but can never produce a
+    * cross-user pair, so pruning it from the sides drops pure join
+    * fan-in at zero semantic cost. The iu frame is item-grain (catalog-
+    * sized), broadcastable by construction. */
   private def simSides(counts: DataFrame, maxItemUsers: Option[Int])
       : DataFrame = {
     // deliberately un-cached: the counts aggregation is one cheap shuffle,
@@ -349,33 +350,44 @@ object Collab {
       .unionByName(sims.select(col("u2").as("u1"), col("u1").as("u2"),
         col("cos")))
 
+  /** The per-user top-k ranking every recommendation output shares:
+    * `by` descending with the item id as the tiebreak (a total order, so
+    * ranks are deterministic), kept as `rn` (long) ≤ `k`. */
+  private def topK(scored: DataFrame, k: Int, by: String = "score")
+      : DataFrame =
+    scored.withColumn("rn", row_number().over(
+        Window.partitionBy(col("u"))
+          .orderBy(col(by).desc, col("i").asc))
+      .cast("long"))
+      .where(col("rn") <= k)
+
   /** CF candidate scores without the top-k ranking: for each target user,
     * every item they have NOT purchased scored as Σ over similar users of
     * sim × count. Use this directly when ALL candidates are needed (e.g.
     * as the CF side of [[hybridBlend]]) — it skips [[recommend]]'s
-    * row_number window, a full per-user sort of the candidate set. */
-  /** The scoring tail shared by the sym-based and directed paths: weight
-    * partners' item counts by similarity, sum per (target, item), drop
-    * already-purchased items. `sym` is (u1 = target, u2 = partner, cos).
+    * row_number window, a full per-user sort of the candidate set.
     *
-    * `antiFilter` (r18, the r16 `scoreCandidatesDirect` trick ported to
-    * the sym path): when the caller KNOWS `sym.u1` is restricted to a
-    * selective target predicate, passing that predicate filters the
-    * purchased anti-join's build side to the targets' own purchases —
-    * identical semantics (scored.u ⊆ targets, so non-target purchase
-    * rows can never match the anti key) — and the hinted broadcast
-    * replaces a SortMergeJoin that exchanged + sorted the 5.35 M-row
-    * candidate frame per consumer (guide §3.1/§3.2: shrink the build
-    * side, then broadcast it). Selectivity CONTRACT as in
+    * `targetFilter` builds the target predicate from whichever column
+    * holds the user id; `None` scores every user. `Some(f)` keeps the
+    * `f(u1)` rows of the similarity frame AND (r18, the r16
+    * [[scoreCandidatesDirect]] trick ported to the sym path) filters the
+    * purchased anti-join's build side to `f(u)`, the targets' own
+    * purchases — identical semantics (scored.u ⊆ targets, so non-target
+    * purchase rows can never match the anti key) — and the hinted
+    * broadcast replaces a SortMergeJoin that exchanged + sorted the
+    * 5.35 M-row candidate frame per consumer (shrink the build side,
+    * then broadcast it). Selectivity CONTRACT as in
     * [[directedSimilarities]]. */
-  private def scoreFromSym(sym: DataFrame, counts: DataFrame,
-                           antiFilter: Option[Column => Column] = None)
+  def scoreCandidates(counts: DataFrame, sims: DataFrame,
+                      targetFilter: Option[Column => Column] = None)
       : DataFrame = {
-    val purchased = antiFilter match {
-      case Some(f) => broadcast(
-        counts.select(col("u"), col("i")).where(f(col("u"))))
-      case None => counts.select(col("u"), col("i"))
-    }
+    // No caching: materializing sims would block the targetFilter predicate
+    // from pushing down into the pair join, and counts is one cheap shuffle
+    // to recompute (measured at sf0.1).
+    val positive = col("cos") > 0
+    val sym = symmetricSimilarities(sims)
+      .where(targetFilter.fold(positive)(f => positive && f(col("u1"))))
+    val purchased = counts.select(col("u"), col("i"))
     sym
       .join(counts.select(col("u").as("u2"), col("i"), col("c")), Seq("u2"))
       .groupBy(col("u1").as("u"), col("i"))
@@ -384,26 +396,8 @@ object Collab {
       // anti-join key (u, i) is the group key, so filtering commutes —
       // and it now touches the aggregated candidate grain, not the
       // (sim × item) pre-aggregation blow-up
-      .join(purchased, Seq("u", "i"), "left_anti")
-  }
-
-  private def topK(scored: DataFrame, k: Int): DataFrame =
-    scored.withColumn("rn", row_number().over(
-        Window.partitionBy(col("u"))
-          .orderBy(col("score").desc, col("i").asc))
-      .cast("long"))
-      .where(col("rn") <= k)
-
-  def scoreCandidates(counts: DataFrame, sims: DataFrame,
-                      targetFilter: Column = lit(true),
-                      antiFilter: Option[Column => Column] = None)
-      : DataFrame = {
-    // No caching: materializing sims would block the targetFilter predicate
-    // from pushing down into the pair join, and counts is one cheap shuffle
-    // to recompute (measured at sf0.1).
-    val sym = symmetricSimilarities(sims)
-      .where(col("cos") > 0 && targetFilter)
-    scoreFromSym(sym, counts, antiFilter)
+      .join(targetFilter.fold(purchased)(f =>
+        broadcast(purchased.where(f(col("u"))))), Seq("u", "i"), "left_anti")
   }
 
   /** [[scoreCandidates]] without a precomputed full similarity frame:
@@ -417,9 +411,8 @@ object Collab {
   def scoreCandidatesDirect(counts: DataFrame,
                             targetFilter: Column => Column,
                             maxItemUsers: Option[Int] =
-                              Some(DefaultMaxItemUsers),
-                            topNeighbors: Option[Int] = None): DataFrame = {
-    // The scoring join keeps [[scoreFromSym]]'s SMJ-on-u2 shape — two
+                              Some(DefaultMaxItemUsers)): DataFrame = {
+    // The scoring join keeps [[scoreCandidates]]' SMJ-on-u2 shape — two
     // broadcast variants were measured and REJECTED at sf0.1: (a)
     // repartition pair table by target + broadcast the full partner
     // VECTORS + forced single-wave agg (7.5 s vs 6.45 s; broadcasting
@@ -434,74 +427,35 @@ object Collab {
     // only (same predicate, pushed manually — Catalyst cannot infer that
     // scored.u is target-only), so it broadcasts instead of
     // re-exchanging the candidate frame.
-    val sym0 = directedSimilarities(counts, targetFilter, maxItemUsers)
+    val sym = directedSimilarities(counts, targetFilter, maxItemUsers)
       .where(col("cos") > 0)
-    // optional NEIGHBOR CAP — the 100 TB scale lever for the scoring
-    // stream: the parity semantics sum over ALL sim>0 partners
-    // (`collab_filter.py:67-72` — a 14.6 M-row scoring stream at sf0.1,
-    // the board's adjudicated 5.5× weak entry), but with the partner set
-    // capped at the n most-similar the stream is O(targets · n · items
-    // per partner) regardless of corpus size. Deterministic selection
-    // (cos desc, u2 asc); the window partitions by target, so it rides
-    // the directed frame (targets × partners, small by the broadcast
-    // CONTRACT) — never a corpus-grain sort. n ≥ the user population is
-    // BIT-EQUAL to the uncapped path (the cap selects everything —
-    // gated by the shared oracle, the q_domain_cap precedent); n < that
-    // diverges by design, like ALS vs the exact path.
-    val sym = topNeighbors.fold(sym0) { n =>
-      sym0.withColumn("nbr_rn", row_number().over(
-          Window.partitionBy(col("u1"))
-            .orderBy(col("cos").desc, col("u2").asc)))
-        .where(col("nbr_rn") <= n).drop("nbr_rn")
-    }
-    // The scoring join's shape depends on whether the partner set is
-    // capped:
-    //  - UNCAPPED (parity): explicit-N repartitions pin the scoring
-    //    join's parallelism — the join + partial-agg stage is the
-    //    query's CPU center (13 M output rows), and AQE's
-    //    input-size-based coalescing (~10 MB of exchange input) would
-    //    run it ~10-wide on a 32-core box (measured 2.2 s vs ~0.9 s
-    //    pinned). The repartitions satisfy the join's own distribution
-    //    requirement, so they replace — not add to — the
-    //    ENSURE_REQUIREMENTS exchanges.
-    //    (moving the purchased anti-join BEFORE the aggregation was
-    //    tried and reverted: group-complete removal commutes
-    //    semantically, but the planner placed the anti after the
-    //    (u1, i) exchange anyway — the pre-aggregation exchange carried
-    //    the identical 14.6 M rows — so the rewrite bought nothing and
-    //    lost the pinned broadcast shape)
-    //  - CAPPED (r16): the capped sym frame is ≤ targets·n rows by
-    //    construction — broadcasting IT and probing the partner counts
-    //    map-side deletes both scoring repartitions (two full exchanges
-    //    + sorts of frames that no longer deserve them); the only
-    //    remaining exchange is the (u, i) aggregation of the capped
-    //    scored stream. This is the whole point of the neighbor cap:
-    //    the scoring stream is target-bounded, so its joins get
-    //    broadcast shapes regardless of corpus size.
-    val scored = topNeighbors match {
-      case Some(_) =>
-        broadcast(sym)
-          .join(counts.select(col("u").as("u2"), col("i"), col("c")),
-            Seq("u2"))
-          .groupBy(col("u1").as("u"), col("i"))
-          .agg(stableRound(sum(col("cos") * col("c")), 6).as("score"))
-      case None =>
-        val p = counts.sparkSession.sparkContext.defaultParallelism
-        sym.repartition(p, col("u2"))
-          .join(counts.select(col("u").as("u2"), col("i"), col("c"))
-            .repartition(p, col("u2")), Seq("u2"))
-          .groupBy(col("u1").as("u"), col("i"))
-          .agg(stableRound(sum(col("cos") * col("c")), 6).as("score"))
-    }
-    scored.join(broadcast(counts.select(col("u"), col("i"))
-      .where(targetFilter(col("u")))), Seq("u", "i"), "left_anti")
+    // explicit-N repartitions pin the scoring join's parallelism — the
+    // join + partial-agg stage is the query's CPU center (13 M output
+    // rows), and AQE's input-size-based coalescing (~10 MB of exchange
+    // input) would run it ~10-wide on a 32-core box (measured 2.2 s vs
+    // ~0.9 s pinned). The repartitions satisfy the join's own
+    // distribution requirement, so they replace — not add to — the
+    // ENSURE_REQUIREMENTS exchanges.
+    // (moving the purchased anti-join BEFORE the aggregation was tried
+    // and reverted: group-complete removal commutes semantically, but
+    // the planner placed the anti after the (u1, i) exchange anyway —
+    // the pre-aggregation exchange carried the identical 14.6 M rows —
+    // so the rewrite bought nothing and lost the pinned broadcast shape)
+    val p = counts.sparkSession.sparkContext.defaultParallelism
+    sym.repartition(p, col("u2"))
+      .join(counts.select(col("u").as("u2"), col("i"), col("c"))
+        .repartition(p, col("u2")), Seq("u2"))
+      .groupBy(col("u1").as("u"), col("i"))
+      .agg(stableRound(sum(col("cos") * col("c")), 6).as("score"))
+      .join(broadcast(counts.select(col("u"), col("i"))
+        .where(targetFilter(col("u")))), Seq("u", "i"), "left_anti")
   }
 
   /** CF candidate scoring (`collab_filter.py:64-76`): [[scoreCandidates]]
     * + top-k per user. `targetFilter` restricts which users get
     * recommendations (the reference scores one household per request). */
   def recommend(counts: DataFrame, sims: DataFrame, k: Int,
-                targetFilter: Column = lit(true)): DataFrame =
+                targetFilter: Option[Column => Column] = None): DataFrame =
     topK(scoreCandidates(counts, sims, targetFilter), k)
 
   /** [[recommend]] over [[directedSimilarities]] — same result, but the
@@ -664,10 +618,7 @@ object Collab {
       .select(col("u"), col("r.item").cast("long").as("i"),
         col("r.rating").cast("double").as("score"))
       .join(counts.select(col("u"), col("i")), Seq("u", "i"), "left_anti")
-    recs.withColumn("rn", row_number().over(
-        Window.partitionBy(col("u"))
-          .orderBy(col("score").desc, col("i").asc)).cast("long"))
-      .where(col("rn") <= k)
+    topK(recs, k)
   }
 
   /** Association-rule candidate scores (`customers/views.py:84-126`): for
@@ -840,8 +791,8 @@ object Collab {
     // aggregation over the 13.4 M-row scoring exchange (r17 ledger:
     // 1.2 + 2.4 + 1.8 s stages). r18 restructure (guide §2.4):
     //  1. the anti-join's build side is target-filtered + broadcast
-    //     (scoreFromSym antiFilter — semantics identical, scored.u is
-    //     target-only), deleting the per-consumer (u, i) sort of the
+    //     (scoreCandidates' targetFilter — semantics identical, scored.u
+    //     is target-only), deleting the per-consumer (u, i) sort of the
     //     5.35 M-row candidate frame;
     //  2. deriving the blend's per-user CF max from the top-k window
     //     was TRIED TWICE in r18 and measured worse both times, so the
@@ -856,14 +807,8 @@ object Collab {
     //     re-agg → group-limit → window → broadcast) on the blend's
     //     critical path (~21 vs ~16 s warm on the same box). This
     //     re-confirms the r11 adjudication post-codegen.
-    val scored = scoreCandidates(counts, sims, userFilter(col("u1")),
-      antiFilter = Some(userFilter))
-    val recs = scored
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("u"))
-            .orderBy(col("score").desc, col("i").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    val scored = scoreCandidates(counts, sims, Some(userFilter))
+    val recs = topK(scored, k)
       .select(lit("cf").as("family"), col("u"), col("i"), col("score"),
         col("rn"))
     val assoc = assocScores(counts.where(userFilter(col("u"))), rules)
@@ -904,15 +849,25 @@ object Collab {
       .select(col("u"), col("i"), (col("score") / col("__amax")).as("a_score"))
     val cn = cf.join(broadcast(cnMax), Seq("u"))
       .select(col("u"), col("i"), (col("score") / col("__cmax")).as("c_score"))
-    an.join(cn, Seq("u", "i"), "full_outer")
+    topK(an.join(cn, Seq("u", "i"), "full_outer")
       .select(col("u"), col("i"),
         stableRound(lit(alpha) * coalesce(col("a_score"), lit(0.0)) +
           lit(1.0 - alpha) * coalesce(col("c_score"), lit(0.0)), 6)
-          .as("hybrid_score"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("u"))
-            .orderBy(col("hybrid_score").desc, col("i").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+          .as("hybrid_score")), k, by = "hybrid_score")
   }
+
+  /** Directed hybrid recommendations (`customers/views.py:49-183`): the
+    * target users' association-rule candidates ([[assocScores]]) and
+    * directed CF candidates ([[scoreCandidatesDirect]]), blended and
+    * ranked top-`k` per user by [[hybridBlend]]. The same user predicate
+    * restricts BOTH sources: the directed CF path keys targets as the
+    * self-join's left side; assocScores keys them as u — applying it to
+    * only one side would blend a filtered CF list against all-user
+    * assoc scores. `targetFilter` must be selective — see
+    * [[directedSimilarities]]' broadcast CONTRACT. */
+  def hybridRecommendDirect(counts: DataFrame, rules: DataFrame,
+                            targetFilter: Column => Column, alpha: Double,
+                            k: Int): DataFrame =
+    hybridBlend(assocScores(counts.where(targetFilter(col("u"))), rules),
+      scoreCandidatesDirect(counts, targetFilter), alpha, k)
 }

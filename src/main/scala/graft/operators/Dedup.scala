@@ -31,10 +31,6 @@ object Dedup {
       .drop("__rn")
   }
 
-  /** U2 — distinct combination count (`clean_transactions.py:40-46`). */
-  def distinctKeyCount(df: DataFrame, keys: Seq[String]): Long =
-    df.select(keys.map(col): _*).distinct().count()
-
   /** Duplicate-group report: keys occurring more than once with counts
     * (`remove_duplicates.py:64-70` A19). */
   def duplicateGroups(df: DataFrame, keys: Seq[String]): DataFrame =

@@ -174,12 +174,6 @@ object Heuristics {
         col(item).asc)
   }
 
-  /** The `neural_network` model (`ml_models.py:858-862`) — kept as a
-    * named entry point; delegates to [[heuristicScores]]. */
-  def neuralNetScores(stats: DataFrame, item: String, baseAccuracy: Double,
-                      horizon: String): DataFrame =
-    heuristicScores(stats, item, baseAccuracy, horizon, "neural_network")
-
   /** Department-level predictions (`ml_models.py:1010-1110`): per-category
     * multi-window stats → confidence (recent-customer + transaction
     * ratios), momentum-based growth, and the clamped revenue forecast for

@@ -78,14 +78,6 @@ object Multimodal {
         expr(s"sha2(substring(blob, CAST(fr.offset + 1 AS INT), $frameBytes)"
           + ", 256)").as("frame_sha256"))
 
-  /** Feature-extraction stub: fixed-width feature vector from blob bytes
-    * (xxhash64 of byte slices folded to [0,1]) — the real extractor swaps
-    * in at the same column position with the same `Array[Double]` type. */
-  def featureStub(blob: Column, dim: Int = 8): Column =
-    expr(s"""transform(sequence(0, ${dim - 1}), j ->
-      |  CAST(pmod(xxhash64(substring(blob, j * 8 + 1, 16)), 10000L)
-      |    AS DOUBLE) / 10000.0)""".stripMargin)
-
   final case class Decoded(id: Long, width: Long, height: Long,
                            channels: Long, n_frames: Long)
 

@@ -378,19 +378,6 @@ object NearDup {
         min(element_at(col("__sig"), j + 1)).as(s"mh$j")): _*)
   }
 
-  /** Banded LSH keys off a signature table: (id, band, key). */
-  def bandedKeys(sigs: DataFrame, numHashes: Int,
-                 bandSize: Int): DataFrame = {
-    require(numHashes % bandSize == 0)
-    val nBands = numHashes / bandSize
-    sigs.select(col("id"), explode(array((0 until nBands).map { t =>
-        struct(lit(t).as("band"),
-          concat_ws("_", (0 until bandSize).map(x =>
-            col(s"mh${t * bandSize + x}")): _*).as("key"))
-      }: _*)).as("bk"))
-      .select(col("id"), col("bk.band"), col("bk.key"))
-  }
-
   /** INCREMENTAL near-duplicate detection of a new `batchSigs` batch
     * against a standing `index` signature table (both shaped like
     * [[minHashSignatures]] output; the index side is typically

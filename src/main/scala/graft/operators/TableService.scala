@@ -4,8 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
 
-/** Generic table browse/search/sort/page service (SURVEY §2.2 P1–P4,
-  * §2.6 T9–T10; `Website/market/dunnhumby/views.py:1233-1350`).
+/** Generic table browse/search/sort/page service (SURVEY §2.2 P2–P3,
+  * P6/P9, §2.6 T9–T10; `Website/market/dunnhumby/views.py:1233-1350`).
   *
   * The reference backs every data-table page with one parameterized
   * endpoint: pick a column set, apply gte/lte range filters from a
@@ -16,15 +16,11 @@ import org.apache.spark.sql.types.{NumericType, StringType}
   * parquet scan — at 100 TB the page read touches only the filtered row
   * groups, never the full table. Pagination via sort+offset+limit is a
   * global sort, which is exactly what the reference's `ORDER BY ... OFFSET`
-  * does; for deep pagination at scale use keyset pagination
-  * ([[pageAfter]]) which keeps the sort but turns the offset into a
-  * pushable predicate.
+  * does; for deep pagination at scale use keyset pagination (filter
+  * `key > lastSeen`, then limit) which keeps the sort but turns the
+  * offset into a pushable predicate.
   */
 object TableService {
-
-  /** P1 — column projection (`views.py:1233-1245` `values(...)`). */
-  def project(df: DataFrame, cols: Seq[String]): DataFrame =
-    df.select(cols.map(col): _*)
 
   /** P2 — gte/lte range predicates from a filter mapping
     * (`views.py:1288-1316`). `ranges` maps column → (minInclusive,
@@ -49,31 +45,12 @@ object TableService {
     if (all.isEmpty) df else df.where(all.reduce(_ || _))
   }
 
-  /** P4 — substring search inside a JSON/array field: serialize with
-    * `to_json` then substring-match, the reference's `icontains` on a
-    * JSONField (`views.py:1259-1269`). */
-  def jsonSearch(df: DataFrame, jsonCol: String, term: String): DataFrame =
-    df.where(lower(to_json(col(jsonCol))).contains(term.toLowerCase))
-
   /** T9/T10 — multi-key ordered page: ORDER BY keys, OFFSET, LIMIT
     * (`views.py:1318-1350`; page sizes 20/50). The sort keys must form a
     * total order for deterministic pages. */
   def page(df: DataFrame, order: Seq[Column], pageSize: Int,
            pageNum: Int): DataFrame =
     df.orderBy(order: _*).offset(pageSize * pageNum).limit(pageSize)
-
-  /** Keyset pagination — the 100 TB variant of T9: instead of OFFSET n
-    * (which still sorts and skips n rows), filter `key > lastSeen` and take
-    * the next page. The predicate pushes to the scan. */
-  def pageAfter(df: DataFrame, key: Column, lastSeen: Any,
-                pageSize: Int): DataFrame =
-    df.where(key > lit(lastSeen)).orderBy(key.asc).limit(pageSize)
-
-  /** T9 — total row count for the pager (`views.py:1318`). */
-  def pageCount(df: DataFrame, pageSize: Int): (Long, Long) = {
-    val n = df.count()
-    (n, (n + pageSize - 1) / pageSize)
-  }
 
   /** P6/P9 — cleaning pass: clamp negative money to 0 (`admin.py:372-380`)
     * and drop rows with null required keys. */

@@ -23,15 +23,6 @@ object Sinks {
   def overwrite(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").parquet(path)
 
-  /** S6 — partitioned overwrite: replace only the partitions present in
-    * `df` (the reference's "delete rules of this type, insert new ones"),
-    * via dynamic partition overwrite. */
-  def overwritePartitions(df: DataFrame, path: String,
-                          partitionCol: String): Unit =
-    df.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partitionCol).parquet(path)
-
   /** S6 upsert variant (`views.py:1173-1204`): incoming rows win on key
     * collision, untouched existing rows survive — anti-join + union.
     *

@@ -585,7 +585,7 @@ class LlmOpsSpec extends SparkSpec {
     // commutative IEEE norm multiplication
     assert(full.forall { case (k, v) => direct(k) == v })
     val viaSym = Collab.recommend(counts,
-        Collab.userSimilarities(counts), 3, $"u1" % 2 === 0)
+        Collab.userSimilarities(counts), 3, Some(tf))
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getAs[Double]("score"), r.getAs[Long]("rn"))).toMap
     val viaDirect = Collab.recommendDirect(counts, 3, tf)

@@ -18,7 +18,9 @@ import org.apache.spark.sql.functions._
   *    8–10 s);
   *  - the directed CF pair join broadcasts the target-filtered side —
   *    a SortMergeJoin there would exchange the full partner side, the
-  *    cost the directed path exists to avoid.
+  *    cost the directed path exists to avoid;
+  *  - a targeted CF scoring tail (directed or sym path) broadcasts the
+  *    target-filtered purchased anti-join.
   */
 class PlanDecisionSpec extends SparkSpec {
 
@@ -132,38 +134,68 @@ class PlanDecisionSpec extends SparkSpec {
         "the small exchange and serialize the CPU-heavy shingle work")
   }
 
+  /** (customer, part) purchase counts — the CF queries' input. */
+  private def cfCounts() = {
+    val tb = sources.Tables(spark, dir)
+    operators.Collab.userItemCounts(
+      tb.lineitem
+        .select(col("l_orderkey").as("o_orderkey"), col("l_partkey"))
+        .join(tb.orders.select(col("o_orderkey"), col("o_custkey")),
+          Seq("o_orderkey")),
+      "o_custkey", "l_partkey")
+  }
+
+  /** The plan's anti-joins, broadcast or sort-merge. */
+  private def antiJoins(plan: SparkPlan): Seq[SparkPlan] =
+    collect[SparkPlan](plan) {
+      case j: BroadcastHashJoinExec if j.joinType.sql.contains("ANTI") => j
+      case j: SortMergeJoinExec if j.joinType.sql.contains("ANTI") => j
+    }
+
   test("directed CF scoring: the purchased anti-join broadcasts") {
     // r10: the anti-join builds from the TARGETS' purchases only (the
     // predicate is pushed manually), so it must plan as a broadcast —
     // a SortMergeJoin LeftAnti here re-exchanges the candidate frame
-    val tb = sources.Tables(spark, dir)
-    val tx = tb.lineitem
-      .select(col("l_orderkey").as("o_orderkey"), col("l_partkey"))
-      .join(tb.orders.select(col("o_orderkey"), col("o_custkey")),
-        Seq("o_orderkey"))
-    val counts = operators.Collab.userItemCounts(tx, "o_custkey",
-      "l_partkey")
+    val counts = cfCounts()
     val plan = operators.Collab
       .scoreCandidatesDirect(counts, u => u % 50 === 0)
       .queryExecution.sparkPlan
-    val antis = collect(plan) {
-      case j: BroadcastHashJoinExec if j.joinType.sql.contains("ANTI") => j
-      case j: SortMergeJoinExec if j.joinType.sql.contains("ANTI") => j
-    }
+    val antis = antiJoins(plan)
     assert(antis.nonEmpty, "expected an anti-join in the scoring tail")
     assert(antis.forall(_.isInstanceOf[BroadcastHashJoinExec]),
       "the purchased anti-join planned as a SortMergeJoin — the " +
         "target-filtered build side must broadcast")
   }
 
+  test("sym-path CF scoring: a target predicate broadcasts the purchased " +
+      "anti-join, and no predicate plans no broadcast") {
+    // the sym-path twin of the directed test above (cfFamily's scoring
+    // tail): Some(f) filters the anti-join's build side to the targets'
+    // purchases and hints it, so it must broadcast even with automatic
+    // broadcasts off; None scores the whole board and must leave the
+    // (corpus-grain) purchase table unhinted
+    val counts = cfCounts()
+    val sims = operators.Collab.userSimilarities(counts)
+    def antis(f: Option[org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column]) =
+      withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+        antiJoins(operators.Collab.scoreCandidates(counts, sims, f)
+          .queryExecution.sparkPlan)
+      }
+    val targeted = antis(Some(u => u % 50 === 0))
+    assert(targeted.nonEmpty, "expected an anti-join in the scoring tail")
+    assert(targeted.forall(_.isInstanceOf[BroadcastHashJoinExec]),
+      "the targeted purchased anti-join planned as a SortMergeJoin — " +
+        "the target-filtered build side must broadcast")
+    val board = antis(None)
+    assert(board.nonEmpty, "expected an anti-join in the scoring tail")
+    assert(!board.exists(_.isInstanceOf[BroadcastHashJoinExec]),
+      "the whole-board anti-join broadcast — with no target predicate " +
+        "the purchase table is corpus-grain and must not be hinted")
+  }
+
   test("directed CF: the pair join on item broadcasts the target side") {
-    val tb = sources.Tables(spark, dir)
-    val tx = tb.lineitem
-      .select(col("l_orderkey").as("o_orderkey"), col("l_partkey"))
-      .join(tb.orders.select(col("o_orderkey"), col("o_custkey")),
-        Seq("o_orderkey"))
-    val counts = operators.Collab.userItemCounts(tx, "o_custkey",
-      "l_partkey")
+    val counts = cfCounts()
     val plan = operators.Collab
       .directedSimilarities(counts, u => u % 50 === 0)
       .queryExecution.sparkPlan
