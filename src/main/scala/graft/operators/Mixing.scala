@@ -91,12 +91,13 @@ object Mixing {
     * [[TextAnalysis.tokenCountEstimate]]; output is the slim
     * `(id, source, est_tokens, cum_tokens)` frame the pipeline consumes.
     *
-    * The running sum is the same TWO-LEVEL blocked prefix sum as
-    * [[Packing.tokenSpansFromCounts]], keyed by (source, id-block): docs
-    * cumsum inside `(source, blk)` window partitions of at most
-    * `blockWidth` ids in parallel, the per-(source, block) totals (a
-    * corpus/blockWidth-row frame) prefix-sum per source, and the block
-    * base offsets broadcast back. A naive `partitionBy(source)` window
+    * The running sum is the blocked [[PrefixSum]], keyed by source over
+    * id-range blocks: docs cumsum inside `(source, blk)` window
+    * partitions of at most `blockWidth` ids in parallel, the
+    * per-(source, block) totals (a corpus/blockWidth-row frame)
+    * prefix-sum per source, and the block base offsets broadcast back.
+    * A document with a null id fails the query; a null source is a
+    * source of its own. A naive `partitionBy(source)` window
     * would funnel each source through ONE task — fatal when one source is
     * 60–80 % of a 100 TB mix. `blockWidth` only tunes parallelism; any
     * value gives the same output (asserted by `InvariantsCheck`). */
@@ -115,32 +116,12 @@ object Mixing {
   def takeByTokenBudgetFromCounts(docs: DataFrame, id: String,
                                   estTokens: String, source: String,
                                   budgetTokens: Long,
-                                  blockWidth: Long = 1L << 20): DataFrame = {
-    require(blockWidth >= 1, "blockWidth must be >= 1")
-    import org.apache.spark.sql.expressions.Window
-    // intentional query-local cache (runners clearCache() per query): the
-    // prefix sum consumes this slim (id, source, est, blk) frame TWICE —
-    // the in-block window and the per-block totals — and without it the
-    // whole upstream plan (the full curation pipeline in q_training_mix*)
-    // would execute twice. ~32 B/doc, spills to disk beyond memory.
-    val est = docs.select(col(id), col(source),
-        col(estTokens).cast("long").as("est_tokens"))
-      .withColumn("__blk", floor(col(id) / blockWidth).cast("long"))
-      .cache()
-    val wIn = Window.partitionBy(col(source), col("__blk")).orderBy(col(id))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBlk = est.withColumn("__cum_in", sum(col("est_tokens")).over(wIn))
-    // Per-(source, block) totals: ≤ corpus/blockWidth rows per source —
-    // the per-source sequential window runs over THIS tiny frame only.
-    val wBlk = Window.partitionBy(col(source)).orderBy(col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = est.groupBy(col(source), col("__blk"))
-      .agg(sum(col("est_tokens")).as("__blk_tokens"))
-      .select(col(source), col("__blk"),
-        coalesce(sum(col("__blk_tokens")).over(wBlk), lit(0L)).as("__base"))
-    inBlk.join(broadcast(bases), Seq(source, "__blk"))
-      .withColumn("cum_tokens", col("__base") + col("__cum_in"))
-      .where(col("cum_tokens") <= budgetTokens)
-      .select(col(id), col(source), col("est_tokens"), col("cum_tokens"))
-  }
+                                  blockWidth: Long = 1L << 20): DataFrame =
+    PrefixSum(docs.select(col(id), col(source),
+        col(estTokens).cast("long").as("est_tokens")),
+      Seq(source), Seq(id), PrefixSum.idBlock(col(id), blockWidth),
+      Seq("est_tokens"))
+      .where(col("cum_est_tokens") <= budgetTokens)
+      .select(col(id), col(source), col("est_tokens"),
+        col("cum_est_tokens").as("cum_tokens"))
 }

@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextAnalysis.tokenCountEstimate
@@ -18,10 +17,11 @@ import graft.operators.TextAnalysis.tokenCountEstimate
   *
   * 100 TB shape: a naive global running sum is a WINDOW OVER ONE
   * PARTITION — the whole corpus funnels through a single task. Instead
-  * [[tokenSpans]] computes a TWO-LEVEL prefix sum: documents cumsum
-  * within id-range blocks in parallel, per-block totals (corpus/blockWidth
-  * rows — tiny) prefix-sum on a single small partition, and the block
-  * base offsets broadcast back. Same exact result as the single window —
+  * [[tokenSpans]] runs the blocked [[PrefixSum]] over id-range blocks:
+  * documents cumsum within blocks in parallel, per-block totals
+  * (corpus/blockWidth rows — tiny) prefix-sum on a single small
+  * partition, and the block base offsets broadcast back. A document
+  * with a null id fails the query. Same exact result as the single window —
   * which is precisely what the DuckDB oracle checks, since the mirror IS
   * the single global cumsum.
   */
@@ -43,34 +43,14 @@ object Packing {
     * curation pipeline's budget stage does) or with real tokenizer
     * output. */
   def tokenSpansFromCounts(docs: DataFrame, id: String, estTokens: String,
-                           blockWidth: Long = 1L << 20): DataFrame = {
-    require(blockWidth >= 1, "blockWidth must be >= 1")
-    // intentional query-local cache (runners clearCache() per query): the
-    // prefix sum consumes this frame TWICE — the in-block window and the
-    // per-block totals — and without the cache the whole upstream plan
-    // (e.g. the full curation pipeline in q_training_mix_packed) executes
-    // twice. The frame is the minimal (id, est_tokens, blk) projection,
-    // ~24 B/doc, spilling to disk if it outgrows executor memory.
-    val est = docs.select(col(id).as("id"),
-        col(estTokens).cast("long").as("est_tokens"))
-      .withColumn("blk", floor(col("id") / blockWidth).cast("long"))
-      .cache()
-    val wIn = Window.partitionBy(col("blk")).orderBy(col("id"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBlk = est.withColumn("cum_in", sum(col("est_tokens")).over(wIn))
-    // Per-block totals: ≤ corpus/blockWidth rows — the single-partition
-    // window is over THIS tiny frame, never the corpus.
-    val wBlk = Window.orderBy(col("blk"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val bases = inBlk.groupBy(col("blk"))
-      .agg(sum(col("est_tokens")).as("blk_tokens"))
-      .select(col("blk"),
-        coalesce(sum(col("blk_tokens")).over(wBlk), lit(0L)).as("base"))
-    inBlk.join(broadcast(bases), Seq("blk"))
+                           blockWidth: Long = 1L << 20): DataFrame =
+    PrefixSum(docs.select(col(id).as("id"),
+        col(estTokens).cast("long").as("est_tokens")),
+      Nil, Seq("id"), PrefixSum.idBlock(col("id"), blockWidth),
+      Seq("est_tokens"))
       .select(col("id"), col("est_tokens"),
-        (col("base") + col("cum_in") - col("est_tokens")).as("tok_start"),
-        (col("base") + col("cum_in")).as("tok_end"))
-  }
+        (col("cum_est_tokens") - col("est_tokens")).as("tok_start"),
+        col("cum_est_tokens").as("tok_end"))
 
   /** Per-document packing summary: which training sequences the document
     * lands in. `seq_first`/`seq_last` are the first/last sequence ids the

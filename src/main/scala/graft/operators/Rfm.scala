@@ -4,6 +4,7 @@ import graft.functions.ColumnFns.moneySum
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.NumericType
 
 /** RFM customer segmentation (SURVEY §2.11;
   * `Website/market/dunnhumby/analytics.py:196-313`).
@@ -13,10 +14,13 @@ import org.apache.spark.sql.functions._
   * (`qcut`); here the whole thing is one aggregation plus three window
   * functions plus a `when` chain — no driver materialization.
   *
-  * Two scoring backends:
+  * Three scoring backends:
   *  - [[scoreByNtile]] — exact parity with the reference's
   *    `qcut(rank(method='first'))` semantics, but a GLOBAL window (one
-  *    task). Fine to ~10⁷ customers, a bottleneck beyond.
+  *    task). Fine to ~10⁷ customers, a bottleneck beyond. The default.
+  *  - [[distributedNtileScores]] — the same exact ntile from a blocked
+  *    [[PrefixSum]] rank, no single-task window; selected by
+  *    [[NtileDistributedConf]] for production scale.
   *  - [[scoresByQuantileEdges]] — `approxQuantile(…, 0)` edges + a `when`
   *    chain: embarrassingly parallel, no global sort, the 100 TB path.
   *    Tie semantics can diverge from qcut on heavy ties (SURVEY §7.5#1).
@@ -37,6 +41,8 @@ object Rfm {
     * (`analytics.py:223-230` W3). `reversed` flips labels — the reference
     * scores recency 5=most recent. */
   def scoreByNtile(order: Column, tiebreak: Column, reversed: Boolean): Column = {
+    // NtileDistributedConf selects the blocked form at production scale
+    // single-task: the reference-parity ntile over the customer grain
     val n = ntile(5).over(Window.orderBy(order, tiebreak))
     if (reversed) lit(6) - n else n
   }
@@ -44,15 +50,16 @@ object Rfm {
   /** Session conf that switches the PARITY ntile backend (r17 judge
     * ask #7 — the global `Window.orderBy` funnels the whole
     * customer-grain frame through ONE task): `true` re-expresses the
-    * exact ntile as [[distributedNtileScores]] — a distributed range
-    * sort + 4 boundary-key selections per axis, no single-task window,
-    * SAME results bit-for-bit (RfmSpec pins both backends equal on a
-    * tie-heavy fixture; the oracle gates the default path). Local
-    * default `false` keeps the window form: at bench scale (15 K
-    * customers) the distributed form's ~7 extra jobs cost more than the
-    * one-task sort saves, and the driver's bench must stay comparable
-    * across rounds; production (≥ ~10⁷ customers) sets it with
-    * `spark-submit --conf` — see SCALE.md "RFM parity ntile at scale". */
+    * exact ntile as [[distributedNtileScores]] — a blocked prefix-sum
+    * rank per axis, no single-task window, SAME results bit-for-bit
+    * (RfmSpec pins both backends equal on a tie-heavy fixture; the
+    * oracle gates the default path). Local default `false` keeps the
+    * window form: at bench scale (15 K customers) q_rfm_scores ran in
+    * ~0.8–0.9 s with it and ~1.8–2.0 s with the distributed form (SCALE.md
+    * "RFM parity ntile at scale"), and `graft.Bench` must stay comparable
+    * across rounds; production (≥ ~10⁷
+    * customers) sets it with `spark-submit --conf` — see SCALE.md "RFM
+    * parity ntile at scale". */
   val NtileDistributedConf = "spark.graft.rfm.ntileDistributed"
 
   /** [[NtileDistributedConf]] of `spark`, parsed strictly: anything but
@@ -65,54 +72,50 @@ object Rfm {
         s"$NtileDistributedConf must be true or false, got '$other'")
     }
 
-  /** Exact `ntile(5)` bucket labels over (axis, customer) order WITHOUT
-    * a single-partition window: Spark's ntile assigns bucket sizes
-    * q+1 (first n mod 5 buckets) then q (q = n/5), so a row's bucket is
-    * determined by its global rank against the 4 boundary ranks
-    * b_k = k·q + min(k, n mod 5). The rows AT those ranks are found by
-    * a DISTRIBUTED range sort (orderBy → range exchange, every
-    * partition sorts in parallel) + zipWithIndex + a 4-key collect, and
-    * every other row gets its bucket from a map-only comparison against
-    * the collected boundary keys — rank ≤ b_k ⟺ (axis, customer) ≤
-    * boundary_k, because the composite key is UNIQUE (customer is a
-    * key). One pass per axis; the three axes share the cached base.
-    *
-    * EAGER: the call runs its jobs before it returns — the cached
-    * base's count, then per axis the range-partitioner sample, the
-    * sort's shuffle stage, zipWithIndex's partition-size job and the
-    * boundary-key collect (14 jobs for the three RFM axes, measured
-    * locally with AQE on). The base cache lives only for those jobs: it
-    * is released once every axis's keys are on the driver, and the
-    * returned frame recomputes the base. */
-  private def distributedNtileScores(b: DataFrame,
-                                     axes: Seq[(String, Boolean)])
-      : DataFrame = {
-    val cached = b.cache()
-    val axisKeys = try {
-      val n = cached.count()
-      val q = n / 5
-      val r = n % 5
-      val boundaryRanks = (1 to 4).map(k => k * q + math.min(k, r))
-        .filter(bk => bk >= 1 && bk < n) // degenerate tiny inputs
-      axes.map { case (axis, reversed) =>
-        (axis, reversed, cached.select(col(axis), col("customer"))
-          .orderBy(col(axis).asc, col("customer").asc)
-          .rdd.zipWithIndex()
-          .filter { case (_, idx) => boundaryRanks.contains(idx + 1) }
-          .map(_._1).collect())
-      }
-    } finally cached.unpersist()
-    axisKeys.foldLeft(b) { case (acc, (axis, reversed, keys)) =>
-      // rank(row) > b_k  ⟺  (axis, cust) > key_k  (unique composite)
-      val bucket = keys.foldLeft(lit(1)) { (e, key) =>
-        val (ka, kc) = (key.get(0), key.getAs[Any](1))
-        e + when(col(axis) > lit(ka) ||
-          (col(axis) === lit(ka) && col("customer") > lit(kc)), 1)
-          .otherwise(0)
-      }
-      acc.withColumn(s"${axis}__score",
-        (if (reversed) lit(6) - bucket else bucket).cast("long"))
+  /** Exact `ntile(5)` scores `r_score`/`f_score`/`m_score` over (axis,
+    * customer) order WITHOUT a single-task window. Each axis's rank and
+    * row count come from ONE [[PrefixSum]] over the axes stacked (a
+    * count of ones keyed by axis), and Spark's ntile rule gives the
+    * bucket: with q = n/5 and r = n mod 5 the first r buckets hold q+1
+    * rows, so a row's bucket is 1 plus the number of boundary ranks
+    * b_k = k·q + min(k, r), k = 1..4, below its rank (exact: customer is
+    * a key). Recency and frequency are integral, so they block on the
+    * exact value with the customer's octave under it — the
+    * `frequency = 1` tie group spreads over one block per octave of the
+    * customer key; monetary blocks on its value bucket. Lazy: no job,
+    * nothing persisted. */
+  private def distributedNtileScores(b: DataFrame): DataFrame = {
+    val axes = Seq("recency" -> "r_score", "frequency" -> "f_score",
+      "monetary" -> "m_score")
+    val stacked = b.select(col("customer"), explode(array(axes.indices.map(
+        i => struct(lit(i).as("axis"), col(axes(i)._1).cast("double").as("v"))
+      ): _*)).as("a"))
+      .select(col("a.axis").as("__axis"), col("a.v").as("__v"),
+        col("customer"), lit(1L).as("__one"))
+    // the customer's octave (one value bucket in 16): the block frame
+    // stays ~distinct(value) × log2(customers) rows, not input-sized
+    val custBucket =
+      if (b.schema("customer").dataType.isInstanceOf[NumericType])
+        shiftright(PrefixSum.valueBucket(col("customer")), 4)
+      else lit(0L)
+    // axes 0 and 1 (recency, frequency) are integral
+    val block = when(col("__axis") < 2,
+        struct(col("__v").cast("long").as("hi"), custBucket.as("lo")))
+      .otherwise(struct(PrefixSum.valueBucket(col("__v")).as("hi"),
+        lit(0L).as("lo")))
+    val (rank, n) = (col("cum___one"), col("tot___one"))
+    val r = n % 5
+    val q = ((n - r) / 5).cast("long")
+    val bucket = (1 to 4).foldLeft(lit(1L)) { (e, k) =>
+      e + when(rank > q * k + least(lit(k.toLong), r), 1L).otherwise(0L)
     }
+    // R: small recency → high score (labels [5..1] on ascending recency)
+    val labels = axes.indices.map(i => max(when(col("__axis") === i,
+      if (i == 0) lit(6L) - bucket else bucket)).as(axes(i)._2))
+    val scores = PrefixSum(stacked, Seq("__axis"), Seq("__v", "customer"),
+        block, Seq("__one"))
+      .groupBy(col("customer").as("__c")).agg(labels.head, labels.tail: _*)
+    b.join(scores, col("customer") <=> col("__c")).drop("__c")
   }
 
   /** Base + recency (days since last activity). Works on either an integer
@@ -133,19 +136,14 @@ object Rfm {
   /** Full RFM scoring: recency (lower = better), frequency, monetary →
     * r/f/m scores 1..5 (`analytics.py:208-230`), ntile backend (global
     * window locally, [[distributedNtileScores]] when
-    * [[NtileDistributedConf]] is `true` — identical results, see its scaladoc; RFM
-    * axes are non-null by construction, which the boundary-key
-    * comparison relies on). */
+    * [[NtileDistributedConf]] is `true` — identical results, see its
+    * scaladoc). */
   def scores(tx: DataFrame, customer: String, basket: String, sales: String,
              day: String): DataFrame = {
     val distributed = ntileDistributed(tx.sparkSession)
     val b = withRecency(tx, customer, basket, sales, day)
     if (distributed)
-      distributedNtileScores(b,
-        Seq(("recency", true), ("frequency", false), ("monetary", false)))
-        .withColumnRenamed("recency__score", "r_score")
-        .withColumnRenamed("frequency__score", "f_score")
-        .withColumnRenamed("monetary__score", "m_score")
+      distributedNtileScores(b)
     else b
       // R: small recency → high score (labels [5..1] on ascending recency)
       .withColumn("r_score",

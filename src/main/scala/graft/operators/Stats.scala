@@ -36,6 +36,7 @@ object Stats {
     val cells = cont
       .withColumn("row_tot", sum(col("n")).over(Window.partitionBy(col("g"))))
       .withColumn("col_tot", sum(col("n")).over(Window.partitionBy(col("c"))))
+      // single-task: the table total, over one row per G×C cell
       .withColumn("total", sum(col("n")).over(Window.partitionBy()))
     val e = (col("row_tot") * col("col_tot")) / col("total")
     val cell = (col("n") - e) * (col("n") - e) / e
@@ -103,6 +104,7 @@ object Stats {
   def mannWhitneyU(df: DataFrame, group: Column, value: Column,
                    g1: String, g2: String): DataFrame = {
     val perValue = perValueCounts(df, group, value, g1, g2)
+    // single-task: parity path, one row per distinct value; see *Scalable
     val wBefore = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, -1L)
     val ranked = perValue
@@ -115,30 +117,20 @@ object Stats {
     * stretch ask; the reference itself caps groups at 2.5–4 K rows,
     * `views.py:1708-1754`, so the parity path above matches its
     * semantics and stays the oracle default). The exclusive running sum
-    * of per-value counts is computed as a TWO-LEVEL prefix sum — the
-    * same shape as `Packing.tokenSpansFromCounts` — so no stage ever
-    * sees more than one range partition of the distinct-value frame:
-    * range-partition by v, cumsum inside each partition in parallel,
-    * then add each partition's broadcast base offset (the
-    * single-partition window runs only over the ≤ nBlocks per-partition
-    * totals). Bit-equal to the parity path (same integer sums, same
-    * half-integer ranks) — gated by the same oracle SQL.
-    *
-    * Cache lifetime: each call `.cache()`s its distinct-value frame for
-    * cost (one scan feeds both prefix-sum levels); blocking is keyed by
-    * plan-literal quantile boundaries, so eviction can never change the
-    * answer, but a caller issuing MANY of these should
-    * `spark.catalog.clearCache()` between them (the bench/verify
-    * runners do) or the block frames accumulate until the
-    * ContextCleaner collects them. */
+    * of per-value counts is the blocked [[PrefixSum]] over
+    * [[PrefixSum.valueBucket]] blocks of v, so no stage sees more than
+    * one block of the distinct-value frame; the single-partition window
+    * runs only over the per-block totals. The blocks are 16 per octave
+    * of |v|, so the parallelism is bounded by how many octaves the
+    * values span: values within one octave get at most 16 blocks, and
+    * values within ~1/16 of an octave share one. Lazy and cache-free.
+    * Bit-equal to the parity path (same integer sums, same half-integer
+    * ranks) — gated by the same oracle SQL. `v` must be numeric. */
   def mannWhitneyUScalable(df: DataFrame, group: Column, value: Column,
-                           g1: String, g2: String,
-                           nBlocks: Int = 0): DataFrame = {
-    val perValue = perValueCounts(df, group, value, g1, g2)
-    val ranked = blockCumSums(perValue, Seq("cnt"), nBlocks)
-      .withColumn("before", col("cum_cnt") - col("cnt"))
-    mwTail(ranked)
-  }
+                           g1: String, g2: String): DataFrame =
+    mwTail(PrefixSum(perValueCounts(df, group, value, g1, g2), Nil,
+        Seq("v"), PrefixSum.valueBucket(col("v")), Seq("cnt", "cnt1", "cnt2"))
+      .withColumn("before", col("cum_cnt") - col("cnt")))
 
   /** Shared head of X3: distinct-value grain with per-group counts —
     * the collapse that makes the rank sum exact and the ordered window
@@ -175,75 +167,16 @@ object Stats {
         col("tie_term"))
   }
 
-  /** Two-level distributed INCLUSIVE running sums of `cols` in `orderCol`
-    * (= "v") order: contiguous v-range blocks, per-block window cumsum
-    * (all blocks in parallel), plus each block's base offset — the
-    * global ordered window runs only over the ≤ nBlocks per-block
-    * totals.
-    *
-    * Block key (round-13 advice — the old `spark_partition_id()` tag
-    * was consistent between the in-block pass and the totals pass ONLY
-    * while the range-partitioned frame stayed cached; an evicted block
-    * re-partitioned by a resampled RangePartitioner could disagree):
-    * the boundaries are approx-quantiles of `v`, collected ONCE to the
-    * driver and embedded as plan literals, so `__blk` is a pure
-    * function of the row — both consumers derive the same key whether
-    * or not the cache holds. The result is block-invariant anyway (any
-    * contiguous, consistently-applied blocking yields the same global
-    * cumsum), so sketch wobble between runs cannot change answers.
-    * `v` must order consistently under cast-to-double (numeric metric
-    * axes — both X3/X4 callers qualify); the cache below is now purely
-    * a COST choice (one perValue scan for two consumers). */
-  private def blockCumSums(perValue: DataFrame, cols: Seq[String],
-                           nBlocks0: Int,
-                           withTotals: Boolean = false): DataFrame = {
-    val nBlocks = if (nBlocks0 > 0) nBlocks0
-      else perValue.sparkSession.sparkContext.defaultParallelism
-    val bounds: Array[Double] =
-      if (nBlocks <= 1) Array.empty
-      else perValue.select(col("v").cast("double").as("__vd"))
-        .stat.approxQuantile("__vd",
-          (1 until nBlocks).map(_.toDouble / nBlocks).toArray, 0.001)
-        .distinct.sorted
-    val blkExpr = bounds.foldLeft(lit(0)) { (acc, b) =>
-      acc + when(col("v").cast("double") > lit(b), lit(1)).otherwise(lit(0))
-    }
-    val blocks = perValue.withColumn("__blk", blkExpr).cache()
-    val wIn = Window.partitionBy(col("__blk")).orderBy(col("v"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val inBlk = cols.foldLeft(blocks)((d, c) =>
-      d.withColumn(s"cum_$c", sum(col(c)).over(wIn)))
-    val wBlk = Window.orderBy(col("__blk"))
-      .rowsBetween(Window.unboundedPreceding, -1L)
-    val bases = blocks.groupBy(col("__blk"))
-      .agg(cols.map(c => sum(col(c)).as(s"__tot_$c")).head,
-        cols.map(c => sum(col(c)).as(s"__tot_$c")).tail: _*)
-      .select(col("__blk") +: cols.map(c =>
-        coalesce(sum(col(s"__tot_$c")).over(wBlk), lit(0L))
-          .as(s"__base_$c")): _*)
-    val cum = cols
-      .foldLeft(inBlk.join(broadcast(bases), Seq("__blk")))((d, c) =>
-        d.withColumn(s"cum_$c", col(s"__base_$c") + col(s"cum_$c")))
-      .drop(cols.map(c => s"__base_$c"): _*).drop("__blk")
-    if (!withTotals) cum
-    else {
-      // grand totals as `tot_<c>`, aggregated from the CACHED blocks (a
-      // tiny job, never a second input scan) and broadcast onto every row
-      val totals = blocks.agg(
-        cols.map(c => sum(col(c)).as(s"tot_$c")).head,
-        cols.map(c => sum(col(c)).as(s"tot_$c")).tail: _*)
-      cum.crossJoin(broadcast(totals))
-    }
-  }
-
   /** X4 — two-sample Kolmogorov–Smirnov D = max |F1 − F2| over the pooled
     * support (`views.py:1897-1913`): per-distinct-value group counts →
     * running cumulative counts → CDF gap. */
   def ks2(df: DataFrame, group: Column, value: Column,
           g1: String, g2: String): DataFrame = {
     val perValue = ksPerValue(df, group, value, g1, g2)
+    // single-task: parity path, one row per distinct value; see *Scalable
     val wcum = Window.orderBy(col("v"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    // single-task: the group totals over the same distinct-value frame
     val wtot = Window.partitionBy()
     val cdf = perValue
       .withColumn("cum_c1", sum(col("c1")).over(wcum))
@@ -253,18 +186,15 @@ object Stats {
     ksTail(cdf)
   }
 
-  /** [[ks2]] for UNCAPPED groups — the same two-level prefix-sum shape
-    * as [[mannWhitneyUScalable]] (see its scaladoc for the scale
-    * argument): both cumulative group counts ride ONE range exchange of
-    * the distinct-value frame, totals broadcast from the per-block
-    * cache. Bit-equal to the parity path (integer counts throughout);
-    * gated by the same oracle SQL. Same cache-lifetime note as
-    * [[mannWhitneyUScalable]]: the per-call cache is cost-only;
-    * clearCache() between bulk invocations. */
+  /** [[ks2]] for UNCAPPED groups — the same blocked [[PrefixSum]] as
+    * [[mannWhitneyUScalable]] (see its scaladoc for the scale argument):
+    * both cumulative group counts and their grand totals come out of one
+    * prefix sum over the distinct-value frame. Bit-equal to the parity
+    * path (integer counts throughout); gated by the same oracle SQL. */
   def ks2Scalable(df: DataFrame, group: Column, value: Column,
-                  g1: String, g2: String, nBlocks: Int = 0): DataFrame =
-    ksTail(blockCumSums(ksPerValue(df, group, value, g1, g2),
-      Seq("c1", "c2"), nBlocks, withTotals = true))
+                  g1: String, g2: String): DataFrame =
+    ksTail(PrefixSum(ksPerValue(df, group, value, g1, g2), Nil, Seq("v"),
+      PrefixSum.valueBucket(col("v")), Seq("c1", "c2")))
 
   /** Shared head of X4: per-distinct-value group counts. */
   private def ksPerValue(df: DataFrame, group: Column, value: Column,

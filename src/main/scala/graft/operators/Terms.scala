@@ -154,6 +154,7 @@ object Terms {
       .agg(count(lit(1)).as("n_terms_at"))
     val total = byFreq.select(
       sum(col("cnt") * col("n_terms_at")).as("total"))
+    // single-task: one row per distinct term count, not per term
     val w = Window.orderBy(col("cnt").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     byFreq

@@ -508,6 +508,60 @@ object InvariantsCheck extends Properties("graft.invariants") {
       a == b
     }
 
+  private val prefixRowGen = for {
+    key <- Gen.oneOf(Some("a"), Some("b"), None)
+    v <- Gen.frequency(6 -> Gen.choose(-3, 3).map(i => Some(i / 2.0)),
+      1 -> Gen.oneOf(None, Some(Double.NaN), Some(Double.PositiveInfinity),
+        Some(Double.NegativeInfinity), Some(-0.0), Some(1e-300),
+        Some(-1e300)))
+    x <- Gen.choose(0L, 9L)
+  } yield (key, v, x)
+
+  property("PrefixSum equals a plain running sum over the sorted rows, " +
+      "for any partition keys, tied order values and blocking from one " +
+      "block to one block per row; valueBucket puts null first and NaN " +
+      "last") =
+    forAll(Gen.nonEmptyListOf(prefixRowGen), Gen.choose(0, 4)) {
+      (rows0, blocking) =>
+        val rows = rows0.zipWithIndex.map { case ((k, v, x), id) =>
+          (k, v, id.toLong, x) }
+        val df = rows.toDF("k", "v", "id", "x")
+        val bucket = graft.operators.PrefixSum.valueBucket(col("v"))
+        val block = blocking match {
+          case 0 => lit(0L)                                  // one block
+          case 1 => bucket
+          case 2 => struct(col("v"),
+            graft.operators.PrefixSum.idBlock(col("id"), 3L))
+          case 3 => struct(bucket, col("id"))        // one block per row
+          case _ => struct(col("v"), col("id"))      // one block per row
+        }
+        val got = graft.operators.PrefixSum(df, Seq("k"), Seq("v", "id"),
+            block, Seq("x"))
+          .select("id", "cum_x", "tot_x").collect()
+          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+        // Spark's ascending order: null first, NaN last, -0.0 == 0.0
+        def rank(v: Option[Double]): (Int, Double) = v match {
+          case None => (0, 0.0)
+          case Some(d) if d.isNaN => (2, 0.0)
+          case Some(d) => (1, d + 0.0)
+        }
+        implicit val dbl: Ordering[Double] = Ordering.Double.TotalOrdering
+        val want = rows.groupBy(_._1).values.flatMap { rs =>
+          val sorted = rs.sortBy(r => (rank(r._2), r._3))
+          val cums = sorted.scanLeft(0L)(_ + _._4).tail
+          sorted.zip(cums).map { case (r, c) => r._3 -> (c, rs.map(_._4).sum) }
+        }.toMap
+        val buckets = df.select(col("v"), bucket).collect().map(r =>
+          (Option(r.get(0)).map(_.asInstanceOf[Double]), r.getLong(1)))
+        val monotone = buckets.sortBy(b => rank(b._1)).map(_._2)
+          .sliding(2).forall(p => p.head <= p.last)
+        val ends = buckets.forall { case (v, b) =>
+          (v.nonEmpty || b == Long.MinValue) &&
+            (!v.exists(_.isNaN) || b == Long.MaxValue)
+        }
+        got == want && monotone && ends
+    }
+
   private val packDocGen = for {
     n <- Gen.choose(1, 8)
     docs <- Gen.listOfN(n, for {

@@ -5,13 +5,20 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Operators take their knobs as explicit parameters or session conf
+/** Source rules for `src/main/scala/graft/operators`, checked by grep.
+  *
+  * Operators take their knobs as explicit parameters or session conf
   * (`spark.graft.*`), never from JVM-global system properties or the
   * process environment: a knob read there cannot differ between two
-  * sessions, and `spark-submit --conf` cannot reach it. */
+  * sessions, and `spark-submit --conf` cannot reach it.
+  *
+  * A window with no partition key runs in ONE task. Each one must say
+  * on the line above, as `// single-task: <reason>`, why its input stays
+  * small; row-grain running sums go through `PrefixSum` instead. */
 class OperatorKnobSpec extends AnyFunSuite {
 
-  test("no operator source reads sys.props or sys.env") {
+  /** Every line of every operator source, with its file and index. */
+  private lazy val operatorLines: List[(Path, IndexedSeq[String])] = {
     val root = Paths.get("src/main/scala/graft/operators")
     assert(Files.isDirectory(root), s"$root not found from the build root")
     val walk = Files.walk(root)
@@ -19,10 +26,26 @@ class OperatorKnobSpec extends AnyFunSuite {
       .filter(_.toString.endsWith(".scala")).toList
     finally walk.close()
     assert(sources.nonEmpty)
+    sources.map(f => f -> Files.readAllLines(f).asScala.toIndexedSeq)
+  }
+
+  test("no operator source reads sys.props or sys.env") {
     val offenders = for {
-      f: Path <- sources
-      (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
+      (f, lines) <- operatorLines
+      (line, n) <- lines.zipWithIndex
       if line.contains("sys.props") || line.contains("sys.env")
+    } yield s"$f:${n + 1}: ${line.trim}"
+    assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
+  }
+
+  test("every unpartitioned window in an operator names why it may run " +
+      "in one task") {
+    val offenders = for {
+      (f, lines) <- operatorLines
+      (line, n) <- lines.zipWithIndex
+      if line.contains("Window.orderBy(") ||
+        line.contains("Window.partitionBy()")
+      if n == 0 || !lines(n - 1).trim.matches("""// single-task: \S.*""")
     } yield s"$f:${n + 1}: ${line.trim}"
     assert(offenders.isEmpty, offenders.mkString("\n", "\n", ""))
   }

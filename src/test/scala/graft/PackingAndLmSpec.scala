@@ -89,6 +89,21 @@ class PackingAndLmSpec extends SparkSpec {
     assert(spans(1L) == spans(3L) && spans(3L) == spans(1L << 20))
   }
 
+  test("a document with a null id fails the token spans and the token " +
+      "budget instead of silently dropping out") {
+    val withNull = Seq[(Option[Long], String, String)](
+      (Some(1L), "aaaa bbbb", "web"), (None, "cccc dddd", "web"),
+      (Some(3L), "eeee", "wiki")).toDF("doc_id", "text", "source")
+    def failsOnNullId(df: => org.apache.spark.sql.DataFrame) = {
+      val e = intercept[Exception](df.collect())
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("null id"))), e)
+    }
+    failsOnNullId(Packing.tokenSpans(withNull, "doc_id", "text", 2L))
+    failsOnNullId(graft.operators.Mixing.takeByTokenBudget(withNull,
+      "doc_id", "text", "source", 100L, 2L))
+  }
+
   test("packing: chunk manifest conserves tokens and respects seqLen") {
     val L = 5L
     val chunks = Packing.packedChunks(packDocs, "doc_id", "text", L, 2L)

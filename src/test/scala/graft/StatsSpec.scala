@@ -58,8 +58,8 @@ class StatsSpec extends SparkSpec {
       "random multi-block data") {
     // 400 rows over an 8-partition layout, heavy ties (values on a
     // 0.5 lattice) so tie terms, average ranks, and CDF steps all
-    // exercise the block-boundary arithmetic; nBlocks=5 forces real
-    // cross-block base offsets (no block holds the whole frame)
+    // exercise the block-boundary arithmetic; the values span several
+    // value-bucket blocks, so cross-block base offsets are real
     val rnd = new scala.util.Random(7)
     val rows = (1 to 400).map { i =>
       (if (rnd.nextBoolean()) "x" else "y",
@@ -68,19 +68,18 @@ class StatsSpec extends SparkSpec {
     val df = rows.toDF("g", "v").repartition(8)
     val mw = Stats.mannWhitneyU(df, col("g"), col("v"), "x", "y")
       .head()
-    val mws = Stats.mannWhitneyUScalable(df, col("g"), col("v"), "x", "y",
-      nBlocks = 5).head()
+    val mws = Stats.mannWhitneyUScalable(df, col("g"), col("v"), "x", "y")
+      .head()
     assert(mw == mws, s"MW parity $mw != scalable $mws")
     val ks = Stats.ks2(df, col("g"), col("v"), "x", "y").head()
-    val kss = Stats.ks2Scalable(df, col("g"), col("v"), "x", "y",
-      nBlocks = 5).head()
+    val kss = Stats.ks2Scalable(df, col("g"), col("v"), "x", "y").head()
     assert(ks == kss, s"KS parity $ks != scalable $kss")
     // scale shape: the scalable plans' ordered windows are all
     // partitioned (per-block cumsum) — the only unpartitioned ordered
-    // window runs over the <= nBlocks per-block totals, which the
-    // parity mirror equality above already proves numerically
+    // window runs over the per-block totals, which the parity mirror
+    // equality above already proves numerically
     val plan = Stats.mannWhitneyUScalable(df, col("g"), col("v"),
-      "x", "y", nBlocks = 5).queryExecution.executedPlan.toString
+      "x", "y").queryExecution.executedPlan.toString
     assert(plan.contains("__blk"), plan.take(500))
   }
 
