@@ -1,10 +1,6 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
-
-import scala.collection.mutable
 
 /** Times a single registered query — the per-query drill-down companion
   * to [[Bench]] — and prints a STAGE LEDGER: one row per completed Spark
@@ -26,52 +22,21 @@ import scala.collection.mutable
   */
 object Profile {
 
-  private final case class StageRow(jobId: Int, stageId: Int, name: String,
-      wallSec: Double, tasks: Int, shufReadRows: Long, shufReadMB: Double,
-      shufWriteRows: Long, shufWriteMB: Double, inputMB: Double)
-
-  /** Listener accumulating the per-stage ledger; reset per rep. */
-  private final class Ledger extends SparkListener {
-    val rows = mutable.ArrayBuffer.empty[StageRow]
-    val stageToJob = mutable.Map.empty[Int, Int]
-    var jobs = 0
-    override def onJobStart(js: SparkListenerJobStart): Unit = synchronized {
-      jobs += 1
-      js.stageIds.foreach(sid => stageToJob(sid) = js.jobId)
+  private def printLedger(ledger: Metrics.Ledger): Unit = {
+    val rows = ledger.stages
+    println(f"[ledger] ${"job"}%4s ${"stage"}%5s ${"wall_s"}%7s " +
+      f"${"tasks"}%5s ${"shR_rows"}%10s ${"shR_MB"}%8s ${"shW_rows"}%10s " +
+      f"${"shW_MB"}%8s ${"in_MB"}%8s  name")
+    rows.foreach { r =>
+      println(f"[ledger] ${r.jobId}%4d ${r.stageId}%5d ${r.wallSec}%7.2f " +
+        f"${r.tasks}%5d ${r.shufReadRows}%10d ${r.shufReadMB}%8.1f " +
+        f"${r.shufWriteRows}%10d ${r.shufWriteMB}%8.1f " +
+        f"${r.inputMB}%8.1f  ${r.name}")
     }
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit =
-      synchronized {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        val wall = (for {s <- si.submissionTime; e <- si.completionTime}
-          yield (e - s) / 1e3).getOrElse(0.0)
-        rows += StageRow(
-          stageToJob.getOrElse(si.stageId, -1), si.stageId,
-          si.name.takeWhile(_ != '\n').take(60),
-          wall, si.numTasks,
-          m.shuffleReadMetrics.recordsRead,
-          m.shuffleReadMetrics.totalBytesRead / 1048576.0,
-          m.shuffleWriteMetrics.recordsWritten,
-          m.shuffleWriteMetrics.bytesWritten / 1048576.0,
-          m.inputMetrics.bytesRead / 1048576.0)
-      }
-    def clear(): Unit = synchronized { rows.clear(); stageToJob.clear(); jobs = 0 }
-    def size: Int = synchronized { rows.size }
-    def print(): Unit = synchronized {
-      println(f"[ledger] ${"job"}%4s ${"stage"}%5s ${"wall_s"}%7s " +
-        f"${"tasks"}%5s ${"shR_rows"}%10s ${"shR_MB"}%8s ${"shW_rows"}%10s " +
-        f"${"shW_MB"}%8s ${"in_MB"}%8s  name")
-      rows.sortBy(r => (r.jobId, r.stageId)).foreach { r =>
-        println(f"[ledger] ${r.jobId}%4d ${r.stageId}%5d ${r.wallSec}%7.2f " +
-          f"${r.tasks}%5d ${r.shufReadRows}%10d ${r.shufReadMB}%8.1f " +
-          f"${r.shufWriteRows}%10d ${r.shufWriteMB}%8.1f " +
-          f"${r.inputMB}%8.1f  ${r.name}")
-      }
-      val stageSum = rows.map(_.wallSec).sum
-      println(f"[ledger] jobs=$jobs stages=${rows.size} " +
-        f"stage_wall_sum=$stageSum%.2f s (stages overlap; sum > query wall " +
-        "is normal, sum ≪ wall means driver/scheduling floor dominates)")
-    }
+    val stageSum = rows.map(_.wallSec).sum
+    println(f"[ledger] jobs=${ledger.jobs} stages=${rows.size} " +
+      f"stage_wall_sum=$stageSum%.2f s (stages overlap; sum > query wall " +
+      "is normal, sum ≪ wall means driver/scheduling floor dominates)")
   }
 
   def main(args: Array[String]): Unit = {
@@ -94,8 +59,7 @@ object Profile {
               "comma-separated key=value pairs)")
         }
       })
-    val ledger = new Ledger
-    spark.sparkContext.addSparkListener(ledger)
+    val ledger = Metrics.ledger(spark.sparkContext)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
       if (sys.env.contains("GRAFT_CLEARCACHE")) spark.catalog.clearCache()
@@ -104,27 +68,10 @@ object Profile {
       val df = fn(spark, sfDir)
       val n = df.count()
       val dt = (System.nanoTime() - t0) / 1e9
+      ledger.settle()
       println(f"[profile] $name rep $i: $n rows in $dt%.2f s " +
         f"(${ledger.jobs} jobs)")
-      if (i == reps) {
-        // listener events drain asynchronously — poll until the ledger
-        // stops growing (the bus-drain API is private[spark]; a single
-        // fixed sleep could truncate the final stages of the profiled
-        // rep on a loaded bus — exactly the straggler-diagnosis case
-        // this tool exists for), with a bounded total wait
-        val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-        var last = -1
-        var cur = ledger.size
-        while ((cur != last || cur == 0) && System.nanoTime() < deadline) {
-          Thread.sleep(200)
-          last = cur
-          cur = ledger.size
-        }
-        if (System.nanoTime() >= deadline)
-          println("[ledger] WARNING: listener bus did not settle within " +
-            "10 s — ledger below may be missing trailing stages")
-        ledger.print()
-      }
+      if (i == reps) printLedger(ledger)
     }
     spark.stop()
   }

@@ -195,18 +195,7 @@ object Queries {
         .orderBy(col("customer")),
       Some("""WITH scored AS (""" + rfmScoresSql + """)
         SELECT *,
-          CASE
-            WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'Champions'
-            WHEN f_score >= 4 AND m_score >= 3 THEN 'Loyal Customers'
-            WHEN r_score >= 4 AND f_score >= 3 THEN 'Potential Loyalists'
-            WHEN r_score >= 4 AND f_score <= 2 THEN 'New Customers'
-            WHEN m_score >= 4 THEN 'Big Spenders'
-            WHEN f_score >= 3 AND r_score >= 3 THEN 'Regular Customers'
-            WHEN r_score <= 2 AND f_score >= 3 AND m_score >= 3 THEN 'Need Attention'
-            WHEN r_score <= 2 AND f_score >= 2 AND m_score >= 2 THEN 'At Risk'
-            WHEN r_score <= 2 AND f_score >= 4 AND m_score >= 4 THEN 'Can''t Lose Them'
-            WHEN r_score <= 2 THEN 'Hibernating'
-            ELSE 'Lost' END AS rfm_segment,
+          """ + rfmSegmentCase + """,
           CASE WHEN frequency > 0 THEN monetary / frequency ELSE 0.0 END
             AS avg_basket_value
         FROM scored ORDER BY customer""")),
@@ -262,18 +251,7 @@ object Queries {
         .orderBy(col("rfm_segment")),
       Some("""WITH scored AS (""" + rfmScoresSql + """),
         seg AS (SELECT *,
-          CASE
-            WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'Champions'
-            WHEN f_score >= 4 AND m_score >= 3 THEN 'Loyal Customers'
-            WHEN r_score >= 4 AND f_score >= 3 THEN 'Potential Loyalists'
-            WHEN r_score >= 4 AND f_score <= 2 THEN 'New Customers'
-            WHEN m_score >= 4 THEN 'Big Spenders'
-            WHEN f_score >= 3 AND r_score >= 3 THEN 'Regular Customers'
-            WHEN r_score <= 2 AND f_score >= 3 AND m_score >= 3 THEN 'Need Attention'
-            WHEN r_score <= 2 AND f_score >= 2 AND m_score >= 2 THEN 'At Risk'
-            WHEN r_score <= 2 AND f_score >= 4 AND m_score >= 4 THEN 'Can''t Lose Them'
-            WHEN r_score <= 2 THEN 'Hibernating'
-            ELSE 'Lost' END AS rfm_segment
+          """ + rfmSegmentCase + """
           FROM scored)
         SELECT rfm_segment, COUNT(*) AS n_customers,
           CAST(SUM(recency) AS DOUBLE) / COUNT(*) AS avg_recency,
@@ -892,6 +870,47 @@ object Queries {
     """SELECT c_mktsegment AS g, o_totalprice AS v, o_orderpriority AS pri
       FROM orders JOIN customer ON c_custkey = o_custkey"""
 
+  /** Mirror of [[Stats.mannWhitneyU]] BUILDING vs MACHINERY, the oracle
+    * of q_mannwhitney_u and q_mannwhitney_u_scalable. */
+  private def mannWhitneyOracleSql =
+    """WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
+          WHERE g IN ('BUILDING', 'MACHINERY')),
+        r AS (SELECT g, rank() OVER (ORDER BY v) AS rk,
+          COUNT(*) OVER (PARTITION BY v) AS cnt FROM j),
+        a AS (SELECT
+          SUM(CASE WHEN g = 'BUILDING' THEN rk + (cnt-1)/2.0 END) AS r1,
+          COUNT(CASE WHEN g = 'BUILDING' THEN 1 END) AS n1,
+          COUNT(CASE WHEN g = 'MACHINERY' THEN 1 END) AS n2,
+          CAST(SUM(cnt*cnt - 1) AS BIGINT) AS tie_term FROM r)
+        SELECT n1, n2,
+          floor((r1 - n1*(n1+1)/2.0) * 1e6 + 0.5) / 1e6 AS u_stat,
+          floor((1.0 - 2.0*(r1 - n1*(n1+1)/2.0)/(n1*n2)) * 1e6 + 0.5) / 1e6 AS rank_biserial,
+          tie_term
+        FROM a"""
+
+  /** Mirror of [[Stats.ks2]] BUILDING vs MACHINERY, the oracle of q_ks2
+    * and q_ks2_scalable. */
+  private def ks2OracleSql =
+    """WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
+          WHERE g IN ('BUILDING', 'MACHINERY')),
+        pv AS (SELECT v,
+          CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
+            AS c1,
+          CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
+            AS c2
+          FROM j GROUP BY v),
+        cdf AS (SELECT
+          CAST(SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
+            AS cum1,
+          CAST(SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
+            AS cum2,
+          CAST(SUM(c1) OVER () AS BIGINT) AS t1,
+          CAST(SUM(c2) OVER () AS BIGINT) AS t2 FROM pv)
+        SELECT floor((MAX(abs(CAST(cum1 AS DOUBLE)/t1
+            - CAST(cum2 AS DOUBLE)/t2))) * 1e6 + 0.5) / 1e6 AS ks_stat,
+          MAX(t1) AS n1, MAX(t2) AS n2
+        FROM cdf"""
+
   private def statsSpecs: Seq[Spec] = Seq(
 
     // ---------------------------------------------------------- X1
@@ -948,44 +967,13 @@ object Queries {
     Spec("q_mannwhitney_u",
       (s, dir) => Stats.mannWhitneyU(ordersCust(s, dir), col("c_mktsegment"),
         col("o_totalprice"), "BUILDING", "MACHINERY"),
-      Some("""WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
-          WHERE g IN ('BUILDING', 'MACHINERY')),
-        r AS (SELECT g, rank() OVER (ORDER BY v) AS rk,
-          COUNT(*) OVER (PARTITION BY v) AS cnt FROM j),
-        a AS (SELECT
-          SUM(CASE WHEN g = 'BUILDING' THEN rk + (cnt-1)/2.0 END) AS r1,
-          COUNT(CASE WHEN g = 'BUILDING' THEN 1 END) AS n1,
-          COUNT(CASE WHEN g = 'MACHINERY' THEN 1 END) AS n2,
-          CAST(SUM(cnt*cnt - 1) AS BIGINT) AS tie_term FROM r)
-        SELECT n1, n2,
-          floor((r1 - n1*(n1+1)/2.0) * 1e6 + 0.5) / 1e6 AS u_stat,
-          floor((1.0 - 2.0*(r1 - n1*(n1+1)/2.0)/(n1*n2)) * 1e6 + 0.5) / 1e6 AS rank_biserial,
-          tie_term
-        FROM a""")),
+      Some(mannWhitneyOracleSql)),
 
     // ---------------------------------------------------------- X4
     Spec("q_ks2",
       (s, dir) => Stats.ks2(ordersCust(s, dir), col("c_mktsegment"),
         col("o_totalprice"), "BUILDING", "MACHINERY"),
-      Some("""WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
-          WHERE g IN ('BUILDING', 'MACHINERY')),
-        pv AS (SELECT v,
-          CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-            AS c1,
-          CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
-            AS c2
-          FROM j GROUP BY v),
-        cdf AS (SELECT
-          CAST(SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
-            AS cum1,
-          CAST(SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
-            AS cum2,
-          CAST(SUM(c1) OVER () AS BIGINT) AS t1,
-          CAST(SUM(c2) OVER () AS BIGINT) AS t2 FROM pv)
-        SELECT floor((MAX(abs(CAST(cum1 AS DOUBLE)/t1
-            - CAST(cum2 AS DOUBLE)/t2))) * 1e6 + 0.5) / 1e6 AS ks_stat,
-          MAX(t1) AS n1, MAX(t2) AS n2
-        FROM cdf""")),
+      Some(ks2OracleSql)),
 
     // ------------------------------------------- X3/X4 scale variants
     // The same statistics with the rank/CDF running sums as two-level
@@ -1000,43 +988,12 @@ object Queries {
     Spec("q_mannwhitney_u_scalable",
       (s, dir) => Stats.mannWhitneyUScalable(ordersCust(s, dir),
         col("c_mktsegment"), col("o_totalprice"), "BUILDING", "MACHINERY"),
-      Some("""WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
-          WHERE g IN ('BUILDING', 'MACHINERY')),
-        r AS (SELECT g, rank() OVER (ORDER BY v) AS rk,
-          COUNT(*) OVER (PARTITION BY v) AS cnt FROM j),
-        a AS (SELECT
-          SUM(CASE WHEN g = 'BUILDING' THEN rk + (cnt-1)/2.0 END) AS r1,
-          COUNT(CASE WHEN g = 'BUILDING' THEN 1 END) AS n1,
-          COUNT(CASE WHEN g = 'MACHINERY' THEN 1 END) AS n2,
-          CAST(SUM(cnt*cnt - 1) AS BIGINT) AS tie_term FROM r)
-        SELECT n1, n2,
-          floor((r1 - n1*(n1+1)/2.0) * 1e6 + 0.5) / 1e6 AS u_stat,
-          floor((1.0 - 2.0*(r1 - n1*(n1+1)/2.0)/(n1*n2)) * 1e6 + 0.5) / 1e6 AS rank_biserial,
-          tie_term
-        FROM a""")),
+      Some(mannWhitneyOracleSql)),
 
     Spec("q_ks2_scalable",
       (s, dir) => Stats.ks2Scalable(ordersCust(s, dir),
         col("c_mktsegment"), col("o_totalprice"), "BUILDING", "MACHINERY"),
-      Some("""WITH j AS (SELECT g, v FROM (""" + ordersCustSql + """)
-          WHERE g IN ('BUILDING', 'MACHINERY')),
-        pv AS (SELECT v,
-          CAST(SUM(CASE WHEN g = 'BUILDING' THEN 1 ELSE 0 END) AS BIGINT)
-            AS c1,
-          CAST(SUM(CASE WHEN g = 'MACHINERY' THEN 1 ELSE 0 END) AS BIGINT)
-            AS c2
-          FROM j GROUP BY v),
-        cdf AS (SELECT
-          CAST(SUM(c1) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
-            AS cum1,
-          CAST(SUM(c2) OVER (ORDER BY v ROWS UNBOUNDED PRECEDING) AS BIGINT)
-            AS cum2,
-          CAST(SUM(c1) OVER () AS BIGINT) AS t1,
-          CAST(SUM(c2) OVER () AS BIGINT) AS t2 FROM pv)
-        SELECT floor((MAX(abs(CAST(cum1 AS DOUBLE)/t1
-            - CAST(cum2 AS DOUBLE)/t2))) * 1e6 + 0.5) / 1e6 AS ks_stat,
-          MAX(t1) AS n1, MAX(t2) AS n2
-        FROM cdf""")),
+      Some(ks2OracleSql)),
 
     // ---------------------------------------------------------- EP-4
     Spec("q_differential_quarters",
@@ -1207,6 +1164,37 @@ object Queries {
           ORDER BY score DESC, i) AS BIGINT) AS rn
       FROM scored)
     WHERE rn <= 5 ORDER BY u, rn"""
+
+  /** The association half of the hybrid-blend mirrors (CTEs `bi` …
+    * `assoc`): pair rules over lineitem baskets and the per-user
+    * association scores of users `u % 50 = 0`. */
+  private def hybridAssocCtes =
+    """bi AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
+          FROM lineitem WHERE l_partkey IS NOT NULL),
+        tot AS (SELECT COUNT(DISTINCT basket) AS n FROM bi),
+        cnt AS (SELECT item, COUNT(*) AS c FROM bi GROUP BY item),
+        okb AS (SELECT basket FROM bi GROUP BY basket
+          HAVING COUNT(*) BETWEEN 2 AND 500),
+        pairs AS (
+          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
+          FROM bi a JOIN bi b ON a.basket = b.basket AND a.item < b.item
+          JOIN okb ON okb.basket = a.basket
+          GROUP BY 1, 2
+          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
+        raw AS (SELECT p.item_a, p.item_b,
+            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
+            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
+              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
+          FROM pairs p CROSS JOIN tot t
+          JOIN cnt ca ON ca.item = p.item_a
+          JOIN cnt cb ON cb.item = p.item_b),
+        assoc AS (SELECT ui.u, raw.item_b AS i,
+            floor((SUM(raw.confidence * raw.lift)) * 1e6 + 0.5) / 1e6 AS score
+          FROM ui JOIN raw ON raw.item_a = ui.i
+          WHERE ui.u % 50 = 0
+            AND NOT EXISTS (SELECT 1 FROM ui me
+              WHERE me.u = ui.u AND me.i = raw.item_b)
+          GROUP BY 1, 2)"""
 
   private def mlSpecs: Seq[Spec] = Seq(
 
@@ -1416,32 +1404,7 @@ object Queries {
             AND NOT EXISTS (SELECT 1 FROM ui me
               WHERE me.u = sym.u1 AND me.i = ui.i)
           GROUP BY 1, 2),
-        bi AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
-          FROM lineitem WHERE l_partkey IS NOT NULL),
-        tot AS (SELECT COUNT(DISTINCT basket) AS n FROM bi),
-        cnt AS (SELECT item, COUNT(*) AS c FROM bi GROUP BY item),
-        okb AS (SELECT basket FROM bi GROUP BY basket
-          HAVING COUNT(*) BETWEEN 2 AND 500),
-        pairs AS (
-          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
-          FROM bi a JOIN bi b ON a.basket = b.basket AND a.item < b.item
-          JOIN okb ON okb.basket = a.basket
-          GROUP BY 1, 2
-          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
-        raw AS (SELECT p.item_a, p.item_b,
-            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
-            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
-              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
-          FROM pairs p CROSS JOIN tot t
-          JOIN cnt ca ON ca.item = p.item_a
-          JOIN cnt cb ON cb.item = p.item_b),
-        assoc AS (SELECT ui.u, raw.item_b AS i,
-            floor((SUM(raw.confidence * raw.lift)) * 1e6 + 0.5) / 1e6 AS score
-          FROM ui JOIN raw ON raw.item_a = ui.i
-          WHERE ui.u % 50 = 0
-            AND NOT EXISTS (SELECT 1 FROM ui me
-              WHERE me.u = ui.u AND me.i = raw.item_b)
-          GROUP BY 1, 2),
+        """ + hybridAssocCtes + """,
         an AS (SELECT u, i, score,
             MAX(score) OVER (PARTITION BY u) AS mx FROM assoc),
         cn AS (SELECT u, i, score,
@@ -1495,32 +1458,7 @@ object Queries {
               ORDER BY score DESC, i) AS BIGINT) AS rn
             FROM scored)
           WHERE rn <= 5),
-        bi AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
-          FROM lineitem WHERE l_partkey IS NOT NULL),
-        tot AS (SELECT COUNT(DISTINCT basket) AS n FROM bi),
-        cnt AS (SELECT item, COUNT(*) AS c FROM bi GROUP BY item),
-        okb AS (SELECT basket FROM bi GROUP BY basket
-          HAVING COUNT(*) BETWEEN 2 AND 500),
-        pairs AS (
-          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
-          FROM bi a JOIN bi b ON a.basket = b.basket AND a.item < b.item
-          JOIN okb ON okb.basket = a.basket
-          GROUP BY 1, 2
-          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
-        raw AS (SELECT p.item_a, p.item_b,
-            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
-            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
-              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
-          FROM pairs p CROSS JOIN tot t
-          JOIN cnt ca ON ca.item = p.item_a
-          JOIN cnt cb ON cb.item = p.item_b),
-        assoc AS (SELECT ui.u, raw.item_b AS i,
-            floor((SUM(raw.confidence * raw.lift)) * 1e6 + 0.5) / 1e6 AS score
-          FROM ui JOIN raw ON raw.item_a = ui.i
-          WHERE ui.u % 50 = 0
-            AND NOT EXISTS (SELECT 1 FROM ui me
-              WHERE me.u = ui.u AND me.i = raw.item_b)
-          GROUP BY 1, 2),
+        """ + hybridAssocCtes + """,
         an AS (SELECT u, i, score,
             MAX(score) OVER (PARTITION BY u) AS mx FROM assoc),
         cn AS (SELECT u, i, score,
@@ -1922,26 +1860,7 @@ object Queries {
           ORDER BY c DESC, item LIMIT 500),
         bi2 AS (SELECT bi.basket, bi.item FROM bi
           JOIN elig ON elig.item = bi.item),
-        tot AS (SELECT COUNT(DISTINCT basket) AS n FROM bi2),
-        cnt AS (SELECT item, COUNT(*) AS c FROM bi2 GROUP BY item),
-        okb AS (SELECT basket FROM bi2 GROUP BY basket
-          HAVING COUNT(*) BETWEEN 2 AND 500),
-        pairs AS (
-          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
-          FROM bi2 a JOIN bi2 b ON a.basket = b.basket AND a.item < b.item
-          JOIN okb ON okb.basket = a.basket
-          GROUP BY 1, 2
-          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
-        raw AS (
-          SELECT p.item_a, p.item_b, p.pair_baskets,
-            ca.c AS a_baskets, cb.c AS b_baskets,
-            CAST(p.pair_baskets AS DOUBLE) / t.n AS support,
-            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
-            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
-              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
-          FROM pairs p CROSS JOIN tot t
-          JOIN cnt ca ON ca.item = p.item_a
-          JOIN cnt cb ON cb.item = p.item_b)
+        """ + pairRulesCtes("bi2") + """
         SELECT item_a, item_b, pair_baskets, a_baskets, b_baskets,
           floor((support) * 1e6 + 0.5) / 1e6 AS support,
           floor((confidence) * 1e6 + 0.5) / 1e6 AS confidence,
@@ -1963,26 +1882,7 @@ object Queries {
       Some("""WITH bi AS (SELECT DISTINCT l_orderkey AS basket,
           l_partkey AS item FROM lineitem
           WHERE l_partkey IS NOT NULL AND l_orderkey <= 4000),
-        tot AS (SELECT COUNT(DISTINCT basket) AS n FROM bi),
-        cnt AS (SELECT item, COUNT(*) AS c FROM bi GROUP BY item),
-        okb AS (SELECT basket FROM bi GROUP BY basket
-          HAVING COUNT(*) BETWEEN 2 AND 500),
-        pairs AS (
-          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
-          FROM bi a JOIN bi b ON a.basket = b.basket AND a.item < b.item
-          JOIN okb ON okb.basket = a.basket
-          GROUP BY 1, 2
-          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
-        raw AS (
-          SELECT p.item_a, p.item_b, p.pair_baskets,
-            ca.c AS a_baskets, cb.c AS b_baskets,
-            CAST(p.pair_baskets AS DOUBLE) / t.n AS support,
-            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
-            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
-              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
-          FROM pairs p CROSS JOIN tot t
-          JOIN cnt ca ON ca.item = p.item_a
-          JOIN cnt cb ON cb.item = p.item_b)
+        """ + pairRulesCtes("bi") + """
         SELECT item_a, item_b, pair_baskets, a_baskets, b_baskets,
           floor((support) * 1e6 + 0.5) / 1e6 AS support, floor((confidence) * 1e6 + 0.5) / 1e6 AS confidence,
           floor((lift) * 1e6 + 0.5) / 1e6 AS lift
@@ -2811,6 +2711,113 @@ object Queries {
       FROM words, UNNEST(generate_series(1, len(w)-2)) AS t(i)
       WHERE len(w) >= 3)"""
 
+  /** Sign-LSH bucket and norm per embedding (CTEs `ev` … `n`): the
+    * integer hyperplane arithmetic of [[Ann.lshBuckets]]. */
+  private def signLshBucketsCtes =
+    """ev AS (SELECT vec_id AS id,
+          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
+        dims AS (SELECT id, CAST(i - 1 AS BIGINT) AS i,
+            CAST(floor(v[i] * 1024.0 + 0.5) AS BIGINT) AS q
+          FROM ev, UNNEST(generate_series(1, len(v))) AS t(i)),
+        bits AS (SELECT id, j,
+            CASE WHEN SUM(q * ((j * 4096 + i) * 2654435761 % 2000 - 1000))
+              > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INT)) ELSE 0 END AS b
+          FROM dims, UNNEST(generate_series(0, 7)) AS p(j)
+          GROUP BY id, j),
+        bk AS (SELECT id, CAST(SUM(b) AS BIGINT) AS bucket
+          FROM bits GROUP BY id),
+        n AS (SELECT ev.id, v, sqrt(list_dot_product(v, v)) AS nrm, bucket
+          FROM ev JOIN bk ON bk.id = ev.id)"""
+
+  /** Duplicated 8-word grams merged into contiguous islands per
+    * document (CTEs `w` … `isl`), shared by the ExactSubstr mirrors. */
+  private def substrIslandsCtes =
+    """w AS (SELECT doc_id, string_split(text, ' ') AS ws
+          FROM documents),
+        g AS (SELECT doc_id, i, CAST(('0x' || substr(md5(
+              array_to_string(ws[i:i+7], ' ')), 1, 15)) AS BIGINT) AS h
+          FROM w, LATERAL (SELECT unnest(generate_series(1,
+            len(ws) - 7)) AS i) WHERE len(ws) >= 8),
+        dup AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) >= 2),
+        d AS (SELECT doc_id, i FROM g WHERE h IN (SELECT h FROM dup)),
+        brk AS (SELECT doc_id, i, CASE WHEN i - lag(i) OVER
+            (PARTITION BY doc_id ORDER BY i) > 8 THEN 1 ELSE 0 END AS b
+          FROM d),
+        isl AS (SELECT doc_id, i, SUM(b) OVER (PARTITION BY doc_id
+            ORDER BY i ROWS UNBOUNDED PRECEDING) AS grp FROM brk)"""
+
+  /** Per-dimension min/max scalar quantization to 0..255 codes (CTEs
+    * `e` … `c`), the mirror of [[Ann.sqEncode]]. */
+  private def sq8CodesCtes =
+    """e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
+          FROM embeddings),
+        b AS (SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
+          FROM e, UNNEST(generate_series(1, len(v))) AS t(i) GROUP BY i),
+        ba AS (SELECT list(mn ORDER BY i) AS mins,
+            list(mx ORDER BY i) AS maxs FROM b),
+        c AS (SELECT vec_id, list_transform(generate_series(1, len(v)), i ->
+            CASE WHEN maxs[i] = mins[i] THEN 0
+            ELSE least(255, greatest(0, CAST(floor(
+              (v[i] - mins[i]) / (maxs[i] - mins[i]) * 255.0 + 0.5)
+              AS BIGINT))) END) AS codes
+          FROM e, ba)"""
+
+  /** Word count, punctuation ratio and stopword ratio per document,
+    * the inputs of [[TextAnalysis.qualityScore]] (the tail of CTE `qm`). */
+  private def qualityMetricsSql =
+    """CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
+            AS n_words,
+          floor((CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
+            AS DOUBLE) / length(text)) * 1e6 + 0.5) / 1e6 AS punct_ratio,
+          floor((CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
+              x -> list_contains(['the','a','an','of','and','or','in','to',
+                'is','it','on','for','with','as','at','by'], x))) AS DOUBLE)
+            / len(string_split_regex(trim(text), '\s+'))) * 1e6 + 0.5) / 1e6
+            AS stopword_ratio
+          FROM documents)"""
+
+  /** The incremental-dedup fixture over `documents`: a standing corpus
+    * and a new batch sharing one boilerplate text, the batch also holding
+    * a within-batch duplicate class. */
+  private def incrementalDedupInputs(s: SparkSession, dir: String)
+      : (DataFrame, DataFrame) = {
+        val docs = t(s, dir).documents
+        val corp = docs.selectExpr("doc_id",
+          "CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document' " +
+            "ELSE text END AS text")
+        val batch = docs.selectExpr("doc_id + 100000 AS id",
+          "CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document' " +
+            "WHEN doc_id % 4 = 1 THEN 'batch only duplicate' " +
+            "ELSE text || ' batchnew' END AS text")
+        (corp, batch)
+  }
+
+  /** Mirror of [[Dedup.dedupIncremental]] over [[incrementalDedupInputs]];
+    * the Bloom-prefiltered variant returns the same rows. */
+  private def incrementalDedupSql =
+    """WITH corp AS (SELECT doc_id,
+          CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document'
+            ELSE text END AS text FROM documents),
+        b AS (SELECT doc_id + 100000 AS id,
+          CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document'
+            WHEN doc_id % 4 = 1 THEN 'batch only duplicate'
+            ELSE text || ' batchnew' END AS text FROM documents),
+        idx AS (SELECT DISTINCT md5(text) AS content_hash FROM corp),
+        bd AS (SELECT md5(text) AS content_hash, MIN(id) AS id
+          FROM b GROUP BY 1)
+        SELECT id, content_hash FROM bd
+        WHERE content_hash NOT IN (SELECT content_hash FROM idx)
+        ORDER BY id"""
+
+  /** The ANN mirrors' final ranking: top 10 candidates per query from
+    * CTE `scored`, by cosine with cand_id breaking ties. */
+  private def annTop10Sql =
+    """SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
+            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
+              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
+          FROM scored)
+        WHERE rn <= 10 ORDER BY query_id, rn"""
+
   private def llmSpecs: Seq[Spec] = Seq(
 
     // ------------------------------------------------- exact Jaccard neardup
@@ -2942,11 +2949,7 @@ object Queries {
         scored AS (SELECT q.vec_id AS query_id, c.vec_id AS cand_id,
             floor((list_dot_product(q.v, c.v) / (q.nrm * c.nrm)) * 1e4 + 0.5) / 1e4 AS cosine
           FROM q CROSS JOIN n c WHERE c.vec_id <> q.vec_id)
-        SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
-          FROM scored)
-        WHERE rn <= 10 ORDER BY query_id, rn""")),
+        """ + annTop10Sql)),
 
     // -------------------------------------- SQ8 scalar-quantized corpus
     // FAISS-SQ8 shape: per-dim affine codes in [0,255] (4x smaller
@@ -2960,18 +2963,7 @@ object Queries {
             .as("codes_csv"),
           expr("aggregate(codes, 0L, (a, c) -> a + c)").as("code_sum"))
         .orderBy(col("vec_id")),
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          FROM embeddings),
-        b AS (SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-          FROM e, UNNEST(generate_series(1, len(v))) AS t(i) GROUP BY i),
-        ba AS (SELECT list(mn ORDER BY i) AS mins,
-            list(mx ORDER BY i) AS maxs FROM b),
-        c AS (SELECT vec_id, list_transform(generate_series(1, len(v)), i ->
-            CASE WHEN maxs[i] = mins[i] THEN 0
-            ELSE least(255, greatest(0, CAST(floor(
-              (v[i] - mins[i]) / (maxs[i] - mins[i]) * 255.0 + 0.5)
-              AS BIGINT))) END) AS codes
-          FROM e, ba)
+      Some("""WITH """ + sq8CodesCtes + """
         SELECT vec_id,
           array_to_string(list_transform(codes, x -> CAST(x AS VARCHAR)),
             ',') AS codes_csv,
@@ -2984,18 +2976,7 @@ object Queries {
         Ann.sqTopK(e, e.where(col("vec_id") % 100 === 0),
           "vec_id", "embedding", 10).orderBy(col("query_id"), col("rn"))
       },
-      Some("""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-          FROM embeddings),
-        b AS (SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-          FROM e, UNNEST(generate_series(1, len(v))) AS t(i) GROUP BY i),
-        ba AS (SELECT list(mn ORDER BY i) AS mins,
-            list(mx ORDER BY i) AS maxs FROM b),
-        c AS (SELECT vec_id, list_transform(generate_series(1, len(v)), i ->
-            CASE WHEN maxs[i] = mins[i] THEN 0
-            ELSE least(255, greatest(0, CAST(floor(
-              (v[i] - mins[i]) / (maxs[i] - mins[i]) * 255.0 + 0.5)
-              AS BIGINT))) END) AS codes
-          FROM e, ba),
+      Some("""WITH """ + sq8CodesCtes + """,
         h AS (SELECT vec_id, list_transform(generate_series(1, len(codes)),
             i -> mins[i] + (codes[i] * (maxs[i] - mins[i])) / 255.0) AS vh
           FROM c, ba),
@@ -3006,11 +2987,7 @@ object Queries {
             floor((list_dot_product(q.vh, c.vh) / (q.nrm * c.nrm))
               * 1e4 + 0.5) / 1e4 AS cosine
           FROM q CROSS JOIN n c WHERE c.vec_id <> q.vec_id)
-        SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
-          FROM scored)
-        WHERE rn <= 10 ORDER BY query_id, rn""")),
+        """ + annTop10Sql)),
 
     // ------------------------------------------------- ANN via sign-LSH
     Spec("q_ann_lsh",
@@ -3020,29 +2997,12 @@ object Queries {
       // (quantized vector × multiplicative-hash weights), so bucket
       // assignment is bit-identical cross-engine; candidate cosines use
       // the same rounded-double convention as q_ann_bruteforce
-      Some("""WITH ev AS (SELECT vec_id AS id,
-          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        dims AS (SELECT id, CAST(i - 1 AS BIGINT) AS i,
-            CAST(floor(v[i] * 1024.0 + 0.5) AS BIGINT) AS q
-          FROM ev, UNNEST(generate_series(1, len(v))) AS t(i)),
-        bits AS (SELECT id, j,
-            CASE WHEN SUM(q * ((j * 4096 + i) * 2654435761 % 2000 - 1000))
-              > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INT)) ELSE 0 END AS b
-          FROM dims, UNNEST(generate_series(0, 7)) AS p(j)
-          GROUP BY id, j),
-        bk AS (SELECT id, CAST(SUM(b) AS BIGINT) AS bucket
-          FROM bits GROUP BY id),
-        n AS (SELECT ev.id, v, sqrt(list_dot_product(v, v)) AS nrm, bucket
-          FROM ev JOIN bk ON bk.id = ev.id),
+      Some("""WITH """ + signLshBucketsCtes + """,
         scored AS (SELECT q.id AS query_id, c.id AS cand_id,
             floor((list_dot_product(q.v, c.v) / (q.nrm * c.nrm))
               * 1e4 + 0.5) / 1e4 AS cosine
           FROM n q JOIN n c ON q.bucket = c.bucket AND q.id <> c.id)
-        SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
-          FROM scored)
-        WHERE rn <= 10 ORDER BY query_id, rn""")),
+        """ + annTop10Sql)),
 
     // -------------------------------------- ANN, multi-probe sign-LSH
     // Same bucket arithmetic as q_ann_lsh plus Hamming-distance-1 probe
@@ -3051,20 +3011,7 @@ object Queries {
     Spec("q_ann_lsh_multiprobe",
       (s, dir) => Ann.lshTopKMultiProbe(t(s, dir).embeddings, "vec_id",
         "embedding", 10, 8, 8).orderBy(col("query_id"), col("rn")),
-      Some("""WITH ev AS (SELECT vec_id AS id,
-          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        dims AS (SELECT id, CAST(i - 1 AS BIGINT) AS i,
-            CAST(floor(v[i] * 1024.0 + 0.5) AS BIGINT) AS q
-          FROM ev, UNNEST(generate_series(1, len(v))) AS t(i)),
-        bits AS (SELECT id, j,
-            CASE WHEN SUM(q * ((j * 4096 + i) * 2654435761 % 2000 - 1000))
-              > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INT)) ELSE 0 END AS b
-          FROM dims, UNNEST(generate_series(0, 7)) AS p(j)
-          GROUP BY id, j),
-        bk AS (SELECT id, CAST(SUM(b) AS BIGINT) AS bucket
-          FROM bits GROUP BY id),
-        n AS (SELECT ev.id, v, sqrt(list_dot_product(v, v)) AS nrm, bucket
-          FROM ev JOIN bk ON bk.id = ev.id),
+      Some("""WITH """ + signLshBucketsCtes + """,
         probes AS (SELECT id, bucket FROM bk
           UNION ALL
           SELECT id, xor(bucket, CAST(1 AS BIGINT) << CAST(j AS INT))
@@ -3074,11 +3021,7 @@ object Queries {
               * 1e4 + 0.5) / 1e4 AS cosine
           FROM probes p JOIN n q ON q.id = p.id
           JOIN n c ON c.bucket = p.bucket AND c.id <> p.id)
-        SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
-          FROM scored)
-        WHERE rn <= 10 ORDER BY query_id, rn""")),
+        """ + annTop10Sql)),
 
     // ------------------------------------------------- ANN via IVF
     Spec("q_ann_ivf",
@@ -3212,11 +3155,7 @@ object Queries {
               * 1e4 + 0.5) / 1e4 AS cosine
           FROM probes p JOIN assigned a ON a.cell = p.cell
           WHERE p.query_id <> a.cand_id)
-        SELECT query_id, cand_id, cosine, rn FROM (SELECT *,
-            CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY cosine DESC, cand_id) AS BIGINT) AS rn
-          FROM scored)
-        WHERE rn <= 10 ORDER BY query_id, rn""")),
+        """ + annTop10Sql)),
 
     // ------------------------- embedding moments (whitening/drift stats)
     // Covariance inputs on the exact 1/1024 integer lattice: BIGINT sums
@@ -3263,20 +3202,7 @@ object Queries {
     Spec("q_cosine_dups_lsh",
       (s, dir) => Ann.cosineDupPairsLsh(t(s, dir).embeddings,
         "vec_id", "embedding", 0.4),
-      Some("""WITH ev AS (SELECT vec_id AS id,
-          CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
-        dims AS (SELECT id, CAST(i - 1 AS BIGINT) AS i,
-            CAST(floor(v[i] * 1024.0 + 0.5) AS BIGINT) AS q
-          FROM ev, UNNEST(generate_series(1, len(v))) AS t(i)),
-        bits AS (SELECT id, j,
-            CASE WHEN SUM(q * ((j * 4096 + i) * 2654435761 % 2000 - 1000))
-              > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INT)) ELSE 0 END AS b
-          FROM dims, UNNEST(generate_series(0, 7)) AS p(j)
-          GROUP BY id, j),
-        bk AS (SELECT id, CAST(SUM(b) AS BIGINT) AS bucket
-          FROM bits GROUP BY id),
-        n AS (SELECT ev.id, v, sqrt(list_dot_product(v, v)) AS nrm, bucket
-          FROM ev JOIN bk ON bk.id = ev.id)
+      Some("""WITH """ + signLshBucketsCtes + """
         SELECT a.id AS id_a, b.id AS id_b,
           floor((list_dot_product(a.v, b.v) / (a.nrm * b.nrm))
             * 1e4 + 0.5) / 1e4 AS cosine
@@ -3314,16 +3240,7 @@ object Queries {
       (s, dir) => TextAnalysis.qualityScore(t(s, dir).documents,
         "doc_id", "text").orderBy(col("id")),
       Some("""WITH qm AS (SELECT doc_id AS id,
-          CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-            AS n_words,
-          floor((CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-            AS DOUBLE) / length(text)) * 1e6 + 0.5) / 1e6 AS punct_ratio,
-          floor((CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','an','of','and','or','in','to',
-                'is','it','on','for','with','as','at','by'], x))) AS DOUBLE)
-            / len(string_split_regex(trim(text), '\s+'))) * 1e6 + 0.5) / 1e6
-            AS stopword_ratio
-          FROM documents)
+          """ + qualityMetricsSql + """
         SELECT id, floor((least(CAST(n_words AS DOUBLE) / 50.0, 1.0)
           * least(stopword_ratio * 5.0 + 0.5, 1.0)
           * (1.0 - least(punct_ratio * 5.0, 1.0) * 0.5)) * 1e6 + 0.5) / 1e6
@@ -3988,6 +3905,31 @@ object Queries {
     minSupport = 0.0, minConfidence = 0.0, maxRules = 500,
     pairLimit = 2000, maxBasketSize = 500)
 
+  /** Pair-rule CTEs `tot` … `raw` (support, confidence, lift per
+    * candidate pair, TOP-2000 clamp) over the (basket, item) relation
+    * `bi`, for the mirrors that pre-filter their baskets. */
+  private def pairRulesCtes(bi: String) =
+    s"""tot AS (SELECT COUNT(DISTINCT basket) AS n FROM $bi),
+        cnt AS (SELECT item, COUNT(*) AS c FROM $bi GROUP BY item),
+        okb AS (SELECT basket FROM $bi GROUP BY basket
+          HAVING COUNT(*) BETWEEN 2 AND 500),
+        pairs AS (
+          SELECT a.item AS item_a, b.item AS item_b, COUNT(*) AS pair_baskets
+          FROM $bi a JOIN $bi b ON a.basket = b.basket AND a.item < b.item
+          JOIN okb ON okb.basket = a.basket
+          GROUP BY 1, 2
+          ORDER BY pair_baskets DESC, item_a, item_b LIMIT 2000),
+        raw AS (
+          SELECT p.item_a, p.item_b, p.pair_baskets,
+            ca.c AS a_baskets, cb.c AS b_baskets,
+            CAST(p.pair_baskets AS DOUBLE) / t.n AS support,
+            CAST(p.pair_baskets AS DOUBLE) / ca.c AS confidence,
+            (CAST(p.pair_baskets AS DOUBLE) / ca.c)
+              / (CAST(cb.c AS DOUBLE) / t.n) AS lift
+          FROM pairs p CROSS JOIN tot t
+          JOIN cnt ca ON ca.item = p.item_a
+          JOIN cnt cb ON cb.item = p.item_b)"""
+
   /** Mirror of [[AssociationRules.rulesRaw]] with [[rulesParams]]:
     * pair counting, TOP-2000 candidate clamp, per-item counts, metrics. */
   private def rulesRawSql = biSql + """,
@@ -4035,6 +3977,22 @@ object Queries {
           CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
             AS monetary
         FROM orders GROUP BY o_custkey))"""
+
+  /** The reference's 11-way RFM segment rule over r/f/m scores, shared
+    * by the q_rfm_segments and q_rfm_segment_summary oracles. */
+  private def rfmSegmentCase =
+    """CASE
+            WHEN r_score >= 4 AND f_score >= 4 AND m_score >= 4 THEN 'Champions'
+            WHEN f_score >= 4 AND m_score >= 3 THEN 'Loyal Customers'
+            WHEN r_score >= 4 AND f_score >= 3 THEN 'Potential Loyalists'
+            WHEN r_score >= 4 AND f_score <= 2 THEN 'New Customers'
+            WHEN m_score >= 4 THEN 'Big Spenders'
+            WHEN f_score >= 3 AND r_score >= 3 THEN 'Regular Customers'
+            WHEN r_score <= 2 AND f_score >= 3 AND m_score >= 3 THEN 'Need Attention'
+            WHEN r_score <= 2 AND f_score >= 2 AND m_score >= 2 THEN 'At Risk'
+            WHEN r_score <= 2 AND f_score >= 4 AND m_score >= 4 THEN 'Can''t Lose Them'
+            WHEN r_score <= 2 THEN 'Hibernating'
+            ELSE 'Lost' END AS rfm_segment"""
 
   // Corpus curation gates (decontamination / clustering / mixing) ----------
 
@@ -4166,31 +4124,12 @@ object Queries {
     // classes with the same CASE expression on both engines.
     Spec("q_dedup_incremental",
       (s, dir) => {
-        val docs = t(s, dir).documents
-        val corp = docs.selectExpr("doc_id",
-          "CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document' " +
-            "ELSE text END AS text")
-        val batch = docs.selectExpr("doc_id + 100000 AS id",
-          "CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document' " +
-            "WHEN doc_id % 4 = 1 THEN 'batch only duplicate' " +
-            "ELSE text || ' batchnew' END AS text")
+        val (corp, batch) = incrementalDedupInputs(s, dir)
         Dedup.dedupIncremental(batch,
             Dedup.contentDigests(corp, "text"), "id", "text")
           .orderBy(col("id"))
       },
-      Some("""WITH corp AS (SELECT doc_id,
-          CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document'
-            ELSE text END AS text FROM documents),
-        b AS (SELECT doc_id + 100000 AS id,
-          CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document'
-            WHEN doc_id % 4 = 1 THEN 'batch only duplicate'
-            ELSE text || ' batchnew' END AS text FROM documents),
-        idx AS (SELECT DISTINCT md5(text) AS content_hash FROM corp),
-        bd AS (SELECT md5(text) AS content_hash, MIN(id) AS id
-          FROM b GROUP BY 1)
-        SELECT id, content_hash FROM bd
-        WHERE content_hash NOT IN (SELECT content_hash FROM idx)
-        ORDER BY id""")),
+      Some(incrementalDedupSql)),
 
     // -------------------- Bloom-prefiltered incremental ingestion dedup
     // Same semantics as q_dedup_incremental — the Bloom sketch rejects
@@ -4200,32 +4139,13 @@ object Queries {
     // anti-join shrinks from |batch| to |dups| + fpp·|batch|).
     Spec("q_dedup_incremental_bloom",
       (s, dir) => {
-        val docs = t(s, dir).documents
-        val corp = docs.selectExpr("doc_id",
-          "CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document' " +
-            "ELSE text END AS text")
-        val batch = docs.selectExpr("doc_id + 100000 AS id",
-          "CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document' " +
-            "WHEN doc_id % 4 = 1 THEN 'batch only duplicate' " +
-            "ELSE text || ' batchnew' END AS text")
+        val (corp, batch) = incrementalDedupInputs(s, dir)
         val index = Dedup.contentDigests(corp, "text")
         val bloom = Dedup.indexBloom(index, expectedItems = 1000000L)
         Dedup.dedupIncrementalBloom(batch, index, "id", "text", bloom)
           .orderBy(col("id"))
       },
-      Some("""WITH corp AS (SELECT doc_id,
-          CASE WHEN doc_id % 7 = 0 THEN 'shared boilerplate document'
-            ELSE text END AS text FROM documents),
-        b AS (SELECT doc_id + 100000 AS id,
-          CASE WHEN doc_id % 4 = 0 THEN 'shared boilerplate document'
-            WHEN doc_id % 4 = 1 THEN 'batch only duplicate'
-            ELSE text || ' batchnew' END AS text FROM documents),
-        idx AS (SELECT DISTINCT md5(text) AS content_hash FROM corp),
-        bd AS (SELECT md5(text) AS content_hash, MIN(id) AS id
-          FROM b GROUP BY 1)
-        SELECT id, content_hash FROM bd
-        WHERE content_hash NOT IN (SELECT content_hash FROM idx)
-        ORDER BY id""")),
+      Some(incrementalDedupSql)),
 
     // ------------------------- per-source length percentile profiling
     // Exact interpolated percentiles (the quantile_cont definition) per
@@ -4251,16 +4171,7 @@ object Queries {
         "id", "quality_score", 0.2)
         .orderBy(col("quality_score").desc, col("id")),
       Some("""WITH qm AS (SELECT doc_id AS id,
-          CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-            AS n_words,
-          floor((CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-            AS DOUBLE) / length(text)) * 1e6 + 0.5) / 1e6 AS punct_ratio,
-          floor((CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','an','of','and','or','in','to',
-                'is','it','on','for','with','as','at','by'], x))) AS DOUBLE)
-            / len(string_split_regex(trim(text), '\s+'))) * 1e6 + 0.5) / 1e6
-            AS stopword_ratio
-          FROM documents),
+          """ + qualityMetricsSql + """,
         qsc AS (SELECT id, floor((least(CAST(n_words AS DOUBLE) / 50.0, 1.0)
           * least(stopword_ratio * 5.0 + 0.5, 1.0)
           * (1.0 - least(punct_ratio * 5.0, 1.0) * 0.5)) * 1e6 + 0.5) / 1e6
@@ -4286,16 +4197,7 @@ object Queries {
         "id", "quality_score", "source", 0.25)
         .orderBy(col("source"), col("quality_score").desc, col("id")),
       Some("""WITH qm AS (SELECT doc_id AS id, source,
-          CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT)
-            AS n_words,
-          floor((CAST(length(regexp_replace(text, '[^.,;:!?]', '', 'g'))
-            AS DOUBLE) / length(text)) * 1e6 + 0.5) / 1e6 AS punct_ratio,
-          floor((CAST(len(list_filter(string_split_regex(trim(text), '\s+'),
-              x -> list_contains(['the','a','an','of','and','or','in','to',
-                'is','it','on','for','with','as','at','by'], x))) AS DOUBLE)
-            / len(string_split_regex(trim(text), '\s+'))) * 1e6 + 0.5) / 1e6
-            AS stopword_ratio
-          FROM documents),
+          """ + qualityMetricsSql + """,
         qsc AS (SELECT id, source,
           floor((least(CAST(n_words AS DOUBLE) / 50.0, 1.0)
           * least(stopword_ratio * 5.0 + 0.5, 1.0)
@@ -4690,19 +4592,7 @@ object Queries {
       (s, dir) => SubstrDedup.duplicateSpans(
           t(s, dir).documents, "doc_id", "text", 8)
         .orderBy(col("doc_id"), col("span_start")),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-          FROM documents),
-        g AS (SELECT doc_id, i, CAST(('0x' || substr(md5(
-              array_to_string(ws[i:i+7], ' ')), 1, 15)) AS BIGINT) AS h
-          FROM w, LATERAL (SELECT unnest(generate_series(1,
-            len(ws) - 7)) AS i) WHERE len(ws) >= 8),
-        dup AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) >= 2),
-        d AS (SELECT doc_id, i FROM g WHERE h IN (SELECT h FROM dup)),
-        brk AS (SELECT doc_id, i, CASE WHEN i - lag(i) OVER
-            (PARTITION BY doc_id ORDER BY i) > 8 THEN 1 ELSE 0 END AS b
-          FROM d),
-        isl AS (SELECT doc_id, i, SUM(b) OVER (PARTITION BY doc_id
-            ORDER BY i ROWS UNBOUNDED PRECEDING) AS grp FROM brk)
+      Some("""WITH """ + substrIslandsCtes + """
         SELECT doc_id, CAST(MIN(i) AS BIGINT) AS span_start,
           CAST(MAX(i) + 7 AS BIGINT) AS span_end,
           CAST(MAX(i) + 7 - MIN(i) + 1 AS BIGINT) AS n_words
@@ -4714,19 +4604,7 @@ object Queries {
       (s, dir) => SubstrDedup.stripDuplicateSpans(
           t(s, dir).documents, "doc_id", "text", 8)
         .orderBy(col("doc_id")),
-      Some("""WITH w AS (SELECT doc_id, string_split(text, ' ') AS ws
-          FROM documents),
-        g AS (SELECT doc_id, i, CAST(('0x' || substr(md5(
-              array_to_string(ws[i:i+7], ' ')), 1, 15)) AS BIGINT) AS h
-          FROM w, LATERAL (SELECT unnest(generate_series(1,
-            len(ws) - 7)) AS i) WHERE len(ws) >= 8),
-        dup AS (SELECT h FROM g GROUP BY h HAVING COUNT(*) >= 2),
-        d AS (SELECT doc_id, i FROM g WHERE h IN (SELECT h FROM dup)),
-        brk AS (SELECT doc_id, i, CASE WHEN i - lag(i) OVER
-            (PARTITION BY doc_id ORDER BY i) > 8 THEN 1 ELSE 0 END AS b
-          FROM d),
-        isl AS (SELECT doc_id, i, SUM(b) OVER (PARTITION BY doc_id
-            ORDER BY i ROWS UNBOUNDED PRECEDING) AS grp FROM brk),
+      Some("""WITH """ + substrIslandsCtes + """,
         sp AS (SELECT doc_id, MIN(i) AS s, MAX(i) + 7 AS e
           FROM isl GROUP BY doc_id, grp),
         cov AS (SELECT doc_id, pos FROM sp,

@@ -164,21 +164,28 @@ object Bpe {
       if (bestRank == Int.MaxValue) done = true
       else {
         val (a, b) = merges.pairs(bestRank)
-        val out = Vector.newBuilder[String]
-        var j = 0
-        while (j < syms.length) {
-          if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
-            out += a + b
-            j += 2
-          } else {
-            out += syms(j)
-            j += 1
-          }
-        }
-        syms = out.result()
+        syms = mergePair(syms, a, b)
       }
     }
     syms
+  }
+
+  /** `syms` with each (a, b) pair fused into `a + b`, scanning left to
+    * right without overlap. */
+  private def mergePair(syms: Vector[String], a: String,
+                        b: String): Vector[String] = {
+    val out = Vector.newBuilder[String]
+    var j = 0
+    while (j < syms.length) {
+      if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
+        out += a + b
+        j += 2
+      } else {
+        out += syms(j)
+        j += 1
+      }
+    }
+    out.result()
   }
 
   /** Tokenize one pre-token (no cache — see [[encode]] for the cached
@@ -269,20 +276,7 @@ object Bpe {
           val (a, b) = best
           words = words.map { case (syms, f) =>
             if (syms.length < 2) (syms, f)
-            else {
-              val out = Vector.newBuilder[String]
-              var j = 0
-              while (j < syms.length) {
-                if (j < syms.length - 1 && syms(j) == a && syms(j + 1) == b) {
-                  out += a + b
-                  j += 2
-                } else {
-                  out += syms(j)
-                  j += 1
-                }
-              }
-              (out.result(), f)
-            }
+            else (mergePair(syms, a, b), f)
           }.groupMapReduce(_._1)(_._2)(_ + _).toVector
           iter += 1
         }

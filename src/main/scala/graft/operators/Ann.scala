@@ -54,15 +54,11 @@ object Ann {
     df.select(col(id).as(idAs), col(vec).as(vAs))
       .withColumn(nAs, sqrt(nativeDot(col(vAs), col(vAs))))
 
-  /** Exact cosine top-k: for each query vector, the k nearest candidates
-    * (self excluded), ranked by rounded cosine with id tiebreak. */
-  def bruteForceTopK(candidates: DataFrame, queries: DataFrame, id: String,
-                     vec: String, k: Int): DataFrame = {
-    GraftExtensions.register(candidates.sparkSession)
-    val c = normalized(candidates, id, vec, "cand_id", "cv", "cn").cache()
-    val q = normalized(queries, id, vec, "query_id", "qv", "qn")
-    q.crossJoin(c)
-      .where(col("query_id") =!= col("cand_id"))
+  /** Rounded-cosine top-k per query over (query_id, qv, qn) ×
+    * (cand_id, cv, cn) candidate pairs: self excluded, ranked by cosine
+    * with cand_id breaking ties. */
+  private def cosineTopK(pairs: DataFrame, k: Int): DataFrame =
+    pairs.where(col("query_id") =!= col("cand_id"))
       .select(col("query_id"), col("cand_id"),
         stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
           4).as("cosine"))
@@ -71,6 +67,15 @@ object Ann {
             .orderBy(col("cosine").desc, col("cand_id").asc))
         .cast("long"))
       .where(col("rn") <= k)
+
+  /** Exact cosine top-k: for each query vector, the k nearest candidates
+    * (self excluded), ranked by rounded cosine with id tiebreak. */
+  def bruteForceTopK(candidates: DataFrame, queries: DataFrame, id: String,
+                     vec: String, k: Int): DataFrame = {
+    GraftExtensions.register(candidates.sparkSession)
+    val c = normalized(candidates, id, vec, "cand_id", "cv", "cn").cache()
+    val q = normalized(queries, id, vec, "query_id", "qv", "qn")
+    cosineTopK(q.crossJoin(c), k)
   }
 
   /** Deterministic pseudo-random hyperplane component for (plane j, dim i):
@@ -106,16 +111,7 @@ object Ann {
       col("v").as("qv"), sqrt(nativeDot(col("v"), col("v"))).as("qn"))
     val c = b.select(col("bucket"), col("id").as("cand_id"),
       col("v").as("cv"), sqrt(nativeDot(col("v"), col("v"))).as("cn"))
-    q.join(c, Seq("bucket"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    cosineTopK(q.join(c, Seq("bucket")), k)
   }
 
   /** Multi-probe sign-LSH (the multi-probe idea of Lv et al., VLDB'07,
@@ -143,16 +139,7 @@ object Ann {
         explode(probeBuckets).as("bucket"))
     val c = b.select(col("bucket"), col("id").as("cand_id"),
       col("v").as("cv"), sqrt(nativeDot(col("v"), col("v"))).as("cn"))
-    q.join(c, Seq("bucket"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    cosineTopK(q.join(c, Seq("bucket")), k)
   }
 
   /** IVF ANN (the inverted-file structure of FAISS-style indexes): a
@@ -207,18 +194,26 @@ object Ann {
       .select(col("id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell"))
 
-    probes
+    cosineTopK(probes
       .join(assigned.select(col("cell"), col("id").as("cand_id"),
-        col("v").as("cv"), col("nrm").as("cn")), Seq("cell"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+        col("v").as("cv"), col("nrm").as("cn")), Seq("cell")), k)
+  }
+
+  /** The strided-sample quantizer's inputs: the normalized vectors
+    * (id, v, nrm), cached (the caller releases them), and as cell centers
+    * (cell, cv0, cn0) the vectors whose id is a multiple of
+    * count / `nCells`, at most `nCells` of them. Counts `df` once. */
+  private def stridedCenters(df: DataFrame, id: String, vec: String,
+                             nCells: Int): (DataFrame, DataFrame) = {
+    GraftExtensions.register(df.sparkSession)
+    val base = normalized(df, id, vec, "id", "v", "nrm").cache()
+    val n = base.count()
+    val stride = math.max(1L, n / nCells)
+    val centers = base.where(col("id") % stride === 0)
+      .orderBy(col("id")).limit(nCells)
+      .select(col("id").as("cell"), col("v").as("cv0"),
+        col("nrm").as("cn0"))
+    (base, centers)
   }
 
   /** IVF with a deterministic SAMPLE coarse quantizer: cell centers are
@@ -233,38 +228,15 @@ object Ann {
     * verifiability. */
   def ivfFlatTopK(df: DataFrame, id: String, vec: String, k: Int,
                   nCells: Int = 16, nProbe: Int = 2): DataFrame = {
-    GraftExtensions.register(df.sparkSession)
-    val base = normalized(df, id, vec, "id", "v", "nrm").cache()
-    val n = base.count()
-    val stride = math.max(1L, n / nCells)
-    val centers = base.where(col("id") % stride === 0)
-      .orderBy(col("id")).limit(nCells)
-      .select(col("id").as("cell"), col("v").as("cv0"),
-        col("nrm").as("cn0"))
-    val simToCenters = base.crossJoin(broadcast(centers))
-      .select(col("id"), col("v"), col("nrm"), col("cell"),
-        stableRound(nativeDot(col("v"), col("cv0"))
-          / (col("nrm") * col("cn0")), 4).as("csim"))
-    val byCloseness = Window.partitionBy(col("id"))
-      .orderBy(col("csim").desc, col("cell").asc)
-    val ranked = simToCenters
-      .withColumn("pr", row_number().over(byCloseness))
+    val (base, centers) = stridedCenters(df, id, vec, nCells)
+    val ranked = rankCenters(base, centers)
     val assigned = ranked.where(col("pr") === 1)
       .select(col("cell"), col("id").as("cand_id"), col("v").as("cv"),
         col("nrm").as("cn"))
     val probes = ranked.where(col("pr") <= nProbe)
       .select(col("id").as("query_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("cell"))
-    probes.join(assigned, Seq("cell"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    cosineTopK(probes.join(assigned, Seq("cell")), k)
   }
 
   /** Persist an IVF index: vectors assigned to their nearest
@@ -275,14 +247,7 @@ object Ann {
     * of the corpus; LlmOpsSpec pins the `PartitionFilters` plan). */
   def writeIvfIndex(df: DataFrame, id: String, vec: String, path: String,
                     nCells: Int = 16): Unit = {
-    GraftExtensions.register(df.sparkSession)
-    val base = normalized(df, id, vec, "id", "v", "nrm").cache()
-    val n = base.count()
-    val stride = math.max(1L, n / nCells)
-    val centers = base.where(col("id") % stride === 0)
-      .orderBy(col("id")).limit(nCells)
-      .select(col("id").as("cell"), col("v").as("cv0"),
-        col("nrm").as("cn0"))
+    val (base, centers) = stridedCenters(df, id, vec, nCells)
     centers.write.mode("overwrite").parquet(s"$path/centers")
     assignToCenters(base, centers)
       .write.mode("overwrite").partitionBy("cell")
@@ -373,17 +338,20 @@ object Ann {
     * the rounding/tiebreak can never desynchronize between the two.
     * Input: normalized (id, v, nrm); centers (cell, cv0, cn0). */
   private def assignToCenters(base: DataFrame,
-                              centers: DataFrame): DataFrame = {
-    val byCloseness = Window.partitionBy(col("id"))
-      .orderBy(col("csim").desc, col("cell").asc)
+                              centers: DataFrame): DataFrame =
+    rankCenters(base, centers).where(col("pr") === 1)
+      .select(col("id"), col("v"), col("nrm"), col("cell"))
+
+  /** Every normalized vector (id, v, nrm) against every center (cell,
+    * cv0, cn0): the rounded cosine `csim` and the center's closeness
+    * rank `pr` for that vector, the lower cell id breaking ties. */
+  private def rankCenters(base: DataFrame, centers: DataFrame): DataFrame =
     base.crossJoin(broadcast(centers))
       .select(col("id"), col("v"), col("nrm"), col("cell"),
         stableRound(nativeDot(col("v"), col("cv0"))
           / (col("nrm") * col("cn0")), 4).as("csim"))
-      .withColumn("pr", row_number().over(byCloseness))
-      .where(col("pr") === 1)
-      .select(col("id"), col("v"), col("nrm"), col("cell"))
-  }
+      .withColumn("pr", row_number().over(Window.partitionBy(col("id"))
+        .orderBy(col("csim").desc, col("cell").asc)))
 
   /** Query a persisted IVF index: probe each query's `nProbe` nearest
     * cells by center cosine, then score exact cosine ONLY against the
@@ -416,16 +384,7 @@ object Ann {
       .where(col("cell").isin(probedCells: _*))
       .select(col("cell"), col("id").as("cand_id"), col("v").as("cv"),
         col("nrm").as("cn"))
-    probes.join(cand, Seq("cell"))
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    cosineTopK(probes.join(cand, Seq("cell")), k)
   }
 
   /** Bucketed embedding near-duplicate pairs: candidates are same-bucket
@@ -522,21 +481,8 @@ object Ann {
   private def clusterAssignmentsWithVecs(df: DataFrame, id: String,
                                          vec: String,
                                          nCells: Int): DataFrame = {
-    GraftExtensions.register(df.sparkSession)
-    val base = normalized(df, id, vec, "id", "v", "nrm").cache()
-    val n = base.count()
-    val stride = math.max(1L, n / nCells)
-    val centers = base.where(col("id") % stride === 0)
-      .orderBy(col("id")).limit(nCells)
-      .select(col("id").as("cell"), col("v").as("cv0"),
-        col("nrm").as("cn0"))
-    base.crossJoin(broadcast(centers))
-      .select(col("id"), col("v"), col("nrm"), col("cell"),
-        stableRound(nativeDot(col("v"), col("cv0"))
-          / (col("nrm") * col("cn0")), 4).as("csim"))
-      .withColumn("pr", row_number().over(Window.partitionBy(col("id"))
-        .orderBy(col("csim").desc, col("cell").asc)))
-      .where(col("pr") === 1)
+    val (base, centers) = stridedCenters(df, id, vec, nCells)
+    rankCenters(base, centers).where(col("pr") === 1)
       .select(col("id"), col("v"), col("nrm"), col("cell"), col("csim"))
   }
 
@@ -699,15 +645,6 @@ object Ann {
         col("nrm").as("qn"))
     val c = enc.select(col("id").as("cand_id"), col("vh").as("cv"),
       col("nrm").as("cn"))
-    q.crossJoin(c)
-      .where(col("query_id") =!= col("cand_id"))
-      .select(col("query_id"), col("cand_id"),
-        stableRound(nativeDot(col("qv"), col("cv")) / (col("qn") * col("cn")),
-          4).as("cosine"))
-      .withColumn("rn", row_number().over(
-          Window.partitionBy(col("query_id"))
-            .orderBy(col("cosine").desc, col("cand_id").asc))
-        .cast("long"))
-      .where(col("rn") <= k)
+    cosineTopK(q.crossJoin(c), k)
   }
 }

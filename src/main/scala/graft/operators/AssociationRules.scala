@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Metrics
 import org.apache.spark.ml.fpm.FPGrowth
 import graft.functions.ColumnFns.stableRound
 import org.apache.spark.sql.{Column, DataFrame}
@@ -483,10 +484,6 @@ object AssociationRules {
     * single-row total via ReuseExchange; counts and total attach by
     * broadcast. All ratio inputs are exact integer counts, so the double
     * arithmetic is bit-deterministic cross-engine. */
-  /** Unique observe-name suffix per [[fpGrowthPairRules]] call — two
-    * calls in one session must not collide on the metric name. */
-  private val fpgObsSeq = new java.util.concurrent.atomic.AtomicLong()
-
   def fpGrowthPairRules(tx: DataFrame, basket: String, item: String,
                         params: Params = Params()): DataFrame = {
     // Per-basket arrays materialized ONCE (localCheckpoint EAGER — the
@@ -510,9 +507,9 @@ object AssociationRules {
     // "populated after an action on this plan"; a Spark version that
     // routed checkpoint materialization around the accumulator would
     // surface here as a one-off slow draw, not a wrong number).
-    val obsName = s"fpg_nbaskets_${fpgObsSeq.incrementAndGet()}"
-    val observed = basketItems(tx, basket, item, params.maxBasketSize)
-      .observe(obsName, count(lit(1)).as("n"))
+    val (obsName, observed) = Metrics.observe(
+      basketItems(tx, basket, item, params.maxBasketSize), "fpg_nbaskets",
+      count(lit(1)).as("n"))
     val baskets = observed.localCheckpoint(true)
     // Retry caveat (r16 advice): `observe` accumulators update at the
     // TRANSFORMATION level, so a speculatively-duplicated task would

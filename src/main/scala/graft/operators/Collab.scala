@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.Metrics
 import graft.functions.ColumnFns.stableRound
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
@@ -61,52 +62,33 @@ object Collab {
   val DefaultMaxItemUsers: Int = 10000
 
   /** Observation-name PREFIX under which a binding hot-item cap reports
-    * itself; each [[userSimilarities]] call appends a unique suffix so
-    * two capped calls over different inputs can coexist in one query
-    * (duplicate CollectMetrics names over non-identical subtrees fail
-    * analysis). The listener matches on the prefix. */
+    * itself; [[Metrics.observe]] appends a unique suffix per
+    * [[userSimilarities]] call, so two capped calls over different
+    * inputs can coexist in one query (duplicate CollectMetrics names over
+    * non-identical subtrees fail analysis). */
   val CapMetricName = "cf_hot_item_cap"
-
-  private val capMetricSeq = new java.util.concurrent.atomic.AtomicLong()
-
-  private val capListenerSessions =
-    java.util.Collections.synchronizedSet(
-      java.util.Collections.newSetFromMap(
-        new java.util.WeakHashMap[org.apache.spark.sql.SparkSession,
-          java.lang.Boolean]()))
 
   /** Logs (WARN) whenever a capped [[userSimilarities]] query actually
     * dropped rows — a binding cap means the result is approximate, and
-    * that must be visible, not silent. Metrics ride the query itself via
-    * `Dataset.observe` (no extra job); registered once per session. */
-  private def capDropListener(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (capListenerSessions.add(spark)) {
-      spark.listenerManager.register(
-        new org.apache.spark.sql.util.QueryExecutionListener {
-          private val log = org.slf4j.LoggerFactory.getLogger("graft.Collab")
-          override def onSuccess(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              ns: Long): Unit =
-            qe.observedMetrics.foreach { case (name, row) =>
-              if (name.startsWith(CapMetricName)) {
-                val dropped = row.getAs[Long]("dropped_rows")
-                if (dropped > 0) log.warn(
-                  s"$name: cap is BINDING — $dropped (user,item) " +
-                    s"rows dropped (hottest item: ${row.getAs[Long]("max_item_users")} " +
-                    "users); similarities are approximate. Pass " +
-                    "maxItemUsers=None for exact mode.")
-              }
-            }
-          override def onFailure(fn: String,
-              qe: org.apache.spark.sql.execution.QueryExecution,
-              e: Exception): Unit = ()
-        })
+    * that must be visible, not silent. The metric rides the query itself
+    * (no extra job). */
+  private val warnIfBinding: (String, org.apache.spark.sql.Row) => Unit = {
+    val log = org.slf4j.LoggerFactory.getLogger("graft.Collab")
+    (name, row) => {
+      val dropped = row.getAs[Long]("dropped_rows")
+      if (dropped > 0) log.warn(
+        s"$name: cap is BINDING — $dropped (user,item) " +
+          s"rows dropped (hottest item: ${row.getAs[Long]("max_item_users")} " +
+          "users); similarities are approximate. Pass " +
+          "maxItemUsers=None for exact mode.")
     }
+  }
 
   /** Cap enforcement mode (r17 judge ask #6 — "a binding cap changes
     * declared results without failing anything at 100 TB"):
-    *  - `warn` (default): a binding cap logs a WARN via the observe
-    *    listener below — zero extra jobs, the metric rides the query;
+    *  - `warn` (default): a binding cap logs a WARN through
+    *    [[Metrics.onObserved]] — zero extra jobs, the metric rides the
+    *    query;
     *  - `fail`: [[cappedBase]] runs an EAGER pre-check (one extra small
     *    item-grain job) and REFUSES to build an approximate plan when
     *    any item exceeds the cap, naming the hottest item and the exact
@@ -156,11 +138,11 @@ object Collab {
     }
     val iuObs = maxItemUsers match {
       case Some(cap) =>
-        capDropListener(counts.sparkSession)
-        iu.observe(s"${CapMetricName}_${capMetricSeq.incrementAndGet()}",
+        Metrics.onObserved(counts.sparkSession, CapMetricName)(warnIfBinding)
+        Metrics.observe(iu, CapMetricName,
           coalesce(sum(when(col("iu") > cap, col("iu")).otherwise(lit(0L))),
             lit(0L)).as("dropped_rows"),
-          coalesce(max(col("iu")), lit(0L)).as("max_item_users"))
+          coalesce(max(col("iu")), lit(0L)).as("max_item_users"))._2
       case None => iu
     }
     val withIu = counts.join(broadcast(iuObs), Seq("i"))

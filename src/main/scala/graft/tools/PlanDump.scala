@@ -13,6 +13,15 @@ import graft.SparkEntry
   *
   * Usage: `runMain graft.tools.PlanDump <outDir> <suffix> <q1,q2,...>
   * [sfDir]` — writes `<outDir>/<query>_<suffix>.txt` per query.
+  *
+  * Plan identity across commits: Spark's multi-distinct rewrite orders
+  * the `Expand` projections of q_churn_features and q_data_quality (and
+  * of q_monthly_trend and q_churn_model_bands) by expression-id hashes,
+  * so in a dump of many queries their plans depend on the queries dumped
+  * before them in the same JVM. A plan-identity check must dump those
+  * alone, one run each, on both sides, and mask what differs between
+  * any two JVMs: `#<n>` expression ids, `plan_id=<n>`, lambda names and
+  * MLlib's random `vecAssembler_<uid>` suffixes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {

@@ -54,17 +54,11 @@ class OperatorsSpec extends SparkSpec {
     // the second load must run ZERO jobs at construction time: the
     // cached StructType (session-free — a cached DataFrame would pin its
     // SparkSession and leak plans in multi-session JVMs) replaces the
-    // schema-inference footer job. Counted via a DEDICATED job group
-    // (round-12 advice: the old global job count was sensitive to any
-    // concurrent Spark job in the shared session) — jobs submitted from
-    // this thread while the group is set are tagged with it, other
-    // suites' jobs are not.
-    val group = "graft-schema-cache-test"
-    spark.sparkContext.setJobGroup(group, "schema cache construction")
-    val b = try graft.sources.Tables(spark, dir).lineitem
-      finally spark.sparkContext.clearJobGroup()
-    val ran = spark.sparkContext.statusTracker.getJobIdsForGroup(group)
-      .length
+    // schema-inference footer job. Counted in a job group of its own
+    // (a global job count would see any concurrent Spark job in the
+    // shared session).
+    val (ran, b) =
+      Metrics.jobsDuring(spark)(graft.sources.Tables(spark, dir).lineitem)
     assert(ran == 0,
       s"constructing a cached-schema table ran $ran job(s)")
     assert(a.schema == b.schema)

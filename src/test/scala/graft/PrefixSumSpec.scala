@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.{Mixing, Packing, Rfm, Stats}
-import org.apache.spark.ListenerBusDrain
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.functions._
@@ -33,15 +32,6 @@ class PrefixSumSpec extends SparkSpec {
   private def rfm = Rfm.scores(tx, "household_key", "basket_id",
     "sales_value", "day")
 
-  /** Jobs `build` runs while constructing its frame, and the frame. */
-  private def constructionJobs(build: => DataFrame): (Int, DataFrame) = {
-    val group = s"graft-prefix-sum-construction-${System.nanoTime}"
-    spark.sparkContext.setJobGroup(group, "frame construction")
-    val df = try build finally spark.sparkContext.clearJobGroup()
-    ListenerBusDrain.drain(spark.sparkContext)
-    (spark.sparkContext.statusTracker.getJobIdsForGroup(group).length, df)
-  }
-
   private def cacheManager =
     spark.asInstanceOf[ClassicSession].sharedState.cacheManager
 
@@ -61,11 +51,11 @@ class PrefixSumSpec extends SparkSpec {
         "leaves no cache or persistent RDD") {
       spark.catalog.clearCache()
       val persisted = spark.sparkContext.getPersistentRDDs.keySet
-      val (jobs, df) = constructionJobs(build())
+      val (jobs, df) = Metrics.jobsDuring(spark)(build())
       // the RFM anchor (withRecency's max day) runs eagerly in every
       // backend, so the window backend's count is the bar
       val allowed =
-        if (name.startsWith("Rfm")) constructionJobs(rfm)._1 else 0
+        if (name.startsWith("Rfm")) Metrics.jobsDuring(spark)(rfm)._1 else 0
       assert(jobs == allowed, s"construction ran $jobs job(s)")
       assert(df.collect().nonEmpty)
       val plan = df.queryExecution.executedPlan.toString
