@@ -2,32 +2,61 @@ package graft
 
 import graft.operators._
 import graft.sources.{Sinks, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Facade mirroring the reference's HTTP endpoint surface (SURVEY §3) so a
   * user of the reference can map each route 1:1 onto an engine call. Each
   * method is a thin composition of the operator modules — no logic of its
-  * own — and returns DataFrames (render/serialize at the caller).
+  * own beyond EP-1's kept responses — and returns DataFrames
+  * (render/serialize at the caller).
   */
 object Endpoints {
 
   /** EP-1 `POST /analysis/association-rules/` (`views.py:1020-1098` →
     * `_generate_association_rules` `views.py:133-348`): period window →
     * pairwise rules at the requested granularity, both directions, sorted
-    * by lift, top max_results. */
+    * by lift, top max_results.
+    *
+    * The page is re-requested with the same window while its input stays
+    * put, so each response is kept (see [[rulesServed]]) and a repeated
+    * request is answered from the driver without a job. The key is the
+    * input's canonical plan and files plus every parameter: another
+    * input, a new file or another window is another request. The response
+    * is ≤ `maxResults` collected rows, so nothing is left registered in
+    * the session. */
   def associationRules(tx: DataFrame, basket: String, item: String,
                        periodDays: Option[Int], day: Column,
                        minSupport: Double, minConfidence: Double,
                        maxResults: Int): DataFrame = {
-    val windowed = periodDays.map(Trends.lastNDays(tx, day, _)).getOrElse(tx)
-    val raw = AssociationRules.rulesRaw(windowed, basket, item,
-      AssociationRules.Params(minSupport, minConfidence,
-        maxRules = maxResults))
-    AssociationRules.bothDirections(raw, minConfidence)
-      .orderBy(col("lift").desc, col("antecedent"), col("consequent"))
-      .limit(maxResults)
+    val key = (tx.queryExecution.analyzed.canonicalized, tx.inputFiles.toSeq,
+      basket, item, periodDays, day.toString, minSupport, minConfidence,
+      maxResults)
+    val (rows, schema) = rulesServed.synchronized(Option(rulesServed.get(key)))
+      .getOrElse {
+        val windowed =
+          periodDays.map(Trends.lastNDays(tx, day, _)).getOrElse(tx)
+        val raw = AssociationRules.rulesRaw(windowed, basket, item,
+          AssociationRules.Params(minSupport, minConfidence,
+            maxRules = maxResults))
+        val rules = AssociationRules.bothDirections(raw, minConfidence)
+          .orderBy(col("lift").desc, col("antecedent"), col("consequent"))
+          .limit(maxResults)
+        val served = (rules.collect(), rules.schema)
+        rulesServed.synchronized(rulesServed.put(key, served))
+        served
+      }
+    tx.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
+
+  /** EP-1's last 16 responses, least recently used evicted first. */
+  private val rulesServed =
+    new java.util.LinkedHashMap[Any, (Array[Row], StructType)](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[Any, (Array[Row], StructType)]): Boolean =
+        size > 16
+    }
 
   /** EP-2 `POST /analysis/api/regenerate-segments/` (`views.py:833-865` →
     * `analytics.py:196-313`): RFM scores + segments, overwrite the

@@ -13,9 +13,8 @@ import org.apache.spark.sql.SparkSession
   * plan, run [[graft.tools.PlanDump]].
   *
   * Usage: `runMain graft.Profile <query_name> [sfDir]`; env knobs:
-  *  - `GRAFT_REPS=n` runs n times (warm-cache timings; ledger printed
+  *  - `GRAFT_REPS=n` runs n times (warm-JVM timings; ledger printed
   *    for the LAST rep only, the JIT-warm one)
-  *  - `GRAFT_CLEARCACHE=1` clears the catalog cache between reps
   *  - `GRAFT_CONF=k=v,k=v` extra runtime SQL confs (A/B a config
   *    hypothesis — e.g. `spark.sql.adaptive.enabled=false` — without
   *    touching the query registration)
@@ -62,7 +61,6 @@ object Profile {
     val ledger = Metrics.ledger(spark.sparkContext)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      if (sys.env.contains("GRAFT_CLEARCACHE")) spark.catalog.clearCache()
       ledger.clear()
       val t0 = System.nanoTime()
       val df = fn(spark, sfDir)

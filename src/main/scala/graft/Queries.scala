@@ -311,10 +311,10 @@ object Queries {
     // ------------------------------------- R1+R2 amortized (one pass)
     // The whole rules family off ONE materialization of the basket
     // aggregate: forward top-500, reverse emission, and the
-    // eligible-restricted mining share the cached per-basket arrays
-    // instead of re-paying the transaction shuffle 3× the way the
-    // isolated per-query registrations must under a cache-clearing
-    // harness. The mirror replays each family from shared CTEs.
+    // eligible-restricted mining share the per-basket arrays instead of
+    // re-paying the transaction shuffle 3× the way the isolated
+    // per-query registrations must. The mirror replays each family from
+    // shared CTEs.
     Spec("q_rules_family",
       (s, dir) => AssociationRules.rulesFamily(t(s, dir).lineitem,
         "l_orderkey", "l_partkey", 5L, 500, rulesParams),
@@ -1605,7 +1605,7 @@ object Queries {
         // 5000 rows do not need parallelism
         val sample = labeled.orderBy(col("o_custkey")).limit(5000)
           .repartition(2).cache()
-        val metrics = ml.Models.trainZoo(sample,
+        val metrics = try ml.Models.trainZoo(sample,
           Seq(("1month", "target_1month", 30),
             ("3months", "target_3months", 90),
             ("6months", "target_6months", 180),
@@ -1617,8 +1617,8 @@ object Queries {
           // layouts (file splits / AQE / cluster size), not just seeds
           Seq("c_mktsegment"), toyScale = true,
           keyCol = Some("o_custkey"))
+        finally sample.unpersist()
         ml.Models.saveMetrics(metrics, "/tmp/graft_models/model_metrics.json")
-        sample.unpersist()
         import s.implicits._
         metrics.toSeq.sortBy(_._1).map { case (k, r) =>
           val m = r.metrics
@@ -1638,13 +1638,14 @@ object Queries {
     Spec("q_model_store",
       (s, dir) => {
         import org.apache.spark.ml.functions.vector_to_array
-        // cached: the feature pipeline would otherwise re-run for the
-        // original scoring, the reloaded re-scoring, the parity guard and
-        // the final rollup (measured 3 recomputes before)
+        // checkpointed: the feature pipeline would otherwise re-run for
+        // the fit, the reloaded re-scoring, the parity guard and the
+        // final rollup (measured 3 recomputes before). Lazily: the fit's
+        // input checkpoint reads it first and materializes it.
         val feats = Churn.features(custItemTx(s, dir), "o_custkey",
           "l_partkey", "l_extendedprice", col("o_orderdate"), 90,
           Some((t(s, dir).customer, "c_custkey", Seq("c_mktsegment"))))
-          .repartition(8).cache()
+          .repartition(8).localCheckpoint(eager = false)
         // 5 trees: the gate is the save→load→re-score BIT-EQUALITY, not
         // model quality (q_churn_model_bands carries the accuracy story)
         val (model, scored) = ml.Models.churnScores(feats,
@@ -1656,7 +1657,9 @@ object Queries {
         val reScored = ml.Models.loadModel(path).transform(feats)
           .withColumn("churn_probability",
             vector_to_array(col("probability")).getItem(1))
-          .select(col("o_custkey"), col("churn_probability")).cache()
+          .select(col("o_custkey"), col("churn_probability"))
+          // read by the parity guard, which materializes it, and the rollup
+          .localCheckpoint(eager = false)
         // parity guard in ONE action (count + agreement together)
         val g = scored
           .select(col("o_custkey"), col("churn_probability").as("p1"))

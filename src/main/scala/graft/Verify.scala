@@ -31,6 +31,13 @@ object Verify {
     // as a red row on the driver's board instead of silently shrinking
     // the denominator (the round-7 streaming regression vanished this way).
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    // a query must release every frame it cached: one that leaves a
+    // CacheManager entry behind is a failure, cleared so the next query
+    // starts clean (the entry count is sql-package-private, hence the
+    // reflective read)
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic
+      .SparkSession].sharedState.cacheManager
+    val cachedEntries = cacheManager.getClass.getMethod("numCachedEntries")
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
@@ -44,11 +51,13 @@ object Verify {
         d.mkdirs()
         Files.writeString(Paths.get(s"$outDir/$name/_ERROR.txt"), msg + "\n")
       }
-      // several operators (LSH/IVF bucketed frames) intentionally return
-      // results backed by a cached intermediate; across ~100 queries those
-      // would pile up, so each query's caches are dropped once its result
-      // is on disk
-      spark.catalog.clearCache()
+      if (!cacheManager.isEmpty) {
+        val leaked = cachedEntries.invoke(cacheManager)
+        val msg = s"left $leaked cached frame(s)"
+        System.err.println(s"[verify] $name failed: $msg")
+        failed(name) = failed.get(name).fold(msg)(m => s"$m; $msg")
+        spark.catalog.clearCache()
+      }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the

@@ -30,33 +30,13 @@ object Models {
     * semantics: label-encode categoricals to their sorted-class code
     * ([[LabelEncoder]] — unseen → class 0), assemble the CODES directly
     * with the numerics (the reference feeds integer codes to its scaler;
-    * it does NOT one-hot), then standard-scale. `oneHot = true` keeps the
-    * round-2/3 one-hot variant as an explicit divergence for callers who
-    * want the better-conditioned encoding. */
-  def featureStages(numericCols: Seq[String], categoricalCols: Seq[String],
-                    oneHot: Boolean = false)
+    * it does NOT one-hot), then standard-scale. */
+  def featureStages(numericCols: Seq[String], categoricalCols: Seq[String])
       : Array[org.apache.spark.ml.PipelineStage] = {
-    val (encStages, catFeatureCols) =
-      if (oneHot) {
-        val indexers = categoricalCols.map(c =>
-          new StringIndexer().setInputCol(c).setOutputCol(s"${c}_idx")
-            .setHandleInvalid("keep")
-            : org.apache.spark.ml.PipelineStage)
-        val encoder =
-          if (categoricalCols.nonEmpty)
-            Seq(new OneHotEncoder()
-              .setInputCols(categoricalCols.map(c => s"${c}_idx").toArray)
-              .setOutputCols(categoricalCols.map(c => s"${c}_oh").toArray)
-              .setDropLast(true)
-              : org.apache.spark.ml.PipelineStage)
-          else Seq.empty
-        (indexers ++ encoder, categoricalCols.map(c => s"${c}_oh"))
-      } else {
-        (categoricalCols.map(c =>
-          new LabelEncoder().setInputCol(c).setOutputCol(s"${c}_code")
-            : org.apache.spark.ml.PipelineStage),
-          categoricalCols.map(c => s"${c}_code"))
-      }
+    val encStages = categoricalCols.map(c =>
+      new LabelEncoder().setInputCol(c).setOutputCol(s"${c}_code")
+        : org.apache.spark.ml.PipelineStage)
+    val catFeatureCols = categoricalCols.map(c => s"${c}_code")
     val assembler = new VectorAssembler()
       .setInputCols((catFeatureCols ++ numericCols).toArray)
       .setOutputCol("rawFeatures")
@@ -87,13 +67,12 @@ object Models {
           math.round(trainFrac * 10000).toInt
       (df.where(inTrain), df.where(!inTrain))
     case None =>
-      // cache + materialize: monotonically_increasing_id and sampleBy
+      // eager local checkpoint: monotonically_increasing_id and sampleBy
       // depend on partition layout, so the sample and its anti-join
       // complement must read the SAME materialization or rows could land
       // in both/neither
       val keyed = df.withColumn("__row_id", monotonically_increasing_id())
-        .cache()
-      keyed.count()
+        .localCheckpoint()
       val labels = keyed.select(col(labelCol)).distinct().collect()
         .map(_.get(0))
       val train = keyed.stat.sampleBy(labelCol,
@@ -171,10 +150,9 @@ object Models {
     val pl = scored.select(col("prediction"), col("label")).cache()
     val ev = new MulticlassClassificationEvaluator()
       .setLabelCol("label").setPredictionCol("prediction")
-    val out = Seq("accuracy", "weightedPrecision", "weightedRecall", "f1")
+    try Seq("accuracy", "weightedPrecision", "weightedRecall", "f1")
       .map(mn => mn -> ev.setMetricName(mn).evaluate(pl)).toMap
-    pl.unpersist()
-    out
+    finally pl.unpersist()
   }
 
   /** One (horizon, model) zoo result: the horizon NAME (the reference's
@@ -232,10 +210,15 @@ object Models {
               .setStages(featureStages(numericCols, categoricalCols))
               .fit(train)
             val trainF = prep.transform(train)
-              .select(col("features"), col("label")).cache()
+              .select(col("features"), col("label"))
             val testF = prep.transform(test)
-              .select(col("features"), col("label")).cache()
-            trainF.count(); testF.count()
+              .select(col("features"), col("label"))
+            trainF.cache(); testF.cache()
+            // a failed materialization fails prepF, which the cleanup
+            // below cannot see, so it releases its own caches
+            try { trainF.count(); testF.count() }
+            catch { case e: Throwable =>
+              trainF.unpersist(); testF.unpersist(); throw e }
             (trainF, testF)
           }
           val modelFs = modelNames.map { mn =>
@@ -304,7 +287,9 @@ object Models {
                   maxIter: Int = 100)
       : (PipelineModel, DataFrame) = {
     val df = features.withColumn("label", col(labelCol).cast("double"))
-      .cache() // GBT iterates over this frame maxIter times
+      // GBT iterates over this frame maxIter times; the fit's first pass
+      // materializes the checkpoint
+      .localCheckpoint(eager = false)
     val model = churnPipeline(numericCols, categoricalCols,
       maxIter = maxIter).fit(df)
     val scored = model.transform(df).withColumn("churn_probability",

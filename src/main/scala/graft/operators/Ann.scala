@@ -23,15 +23,6 @@ import org.apache.spark.sql.functions._
   * codegen'd Catalyst expression (tight primitive loop) replacing the
   * interpreted `aggregate(zip_with(...))` form, bit-identical results
   * (same index order, double accumulation).
-  *
-  * Retained-cache contract: the top-k/pair functions return LAZY frames
-  * backed by a cached intermediate (the normalized or bucketed corpus —
-  * cached so the self-join's two sides don't each recompute the hashing).
-  * The cache must outlive the returned frame's materialization, so these
-  * functions cannot unpersist it themselves; callers running many such
-  * queries per session should `spark.catalog.clearCache()` once a result
-  * is materialized (Verify/Bench do, per query). Terminal operations here
-  * ([[writeIvfIndex]]) release their caches before returning.
   */
 object Ann {
 
@@ -73,7 +64,7 @@ object Ann {
   def bruteForceTopK(candidates: DataFrame, queries: DataFrame, id: String,
                      vec: String, k: Int): DataFrame = {
     GraftExtensions.register(candidates.sparkSession)
-    val c = normalized(candidates, id, vec, "cand_id", "cv", "cn").cache()
+    val c = normalized(candidates, id, vec, "cand_id", "cv", "cn")
     val q = normalized(queries, id, vec, "query_id", "qv", "qn")
     cosineTopK(q.crossJoin(c), k)
   }
@@ -106,7 +97,10 @@ object Ann {
   def lshTopK(df: DataFrame, id: String, vec: String, k: Int,
               nPlanes: Int = 8): DataFrame = {
     GraftExtensions.register(df.sparkSession)
-    val b = lshBuckets(df, id, vec, nPlanes).cache()
+    // read by both join sides, which plan as a broadcast join and share
+    // no exchange: a lazy local checkpoint hashes once, and the
+    // ContextCleaner releases it with the returned frame
+    val b = lshBuckets(df, id, vec, nPlanes).localCheckpoint(eager = false)
     val q = b.select(col("bucket"), col("id").as("query_id"),
       col("v").as("qv"), sqrt(nativeDot(col("v"), col("v"))).as("qn"))
     val c = b.select(col("bucket"), col("id").as("cand_id"),
@@ -130,7 +124,9 @@ object Ann {
                         nPlanes: Int = 8, probes: Int = 8): DataFrame = {
     GraftExtensions.register(df.sparkSession)
     require(probes <= nPlanes, "probes flip one of nPlanes bits")
-    val b = lshBuckets(df, id, vec, nPlanes).cache()
+    // read by the exploded probe side and the candidate side: hashed
+    // once, as in lshTopK
+    val b = lshBuckets(df, id, vec, nPlanes).localCheckpoint(eager = false)
     val probeBuckets = array(
       (col("bucket") +: (0 until probes).map(j =>
         col("bucket").bitwiseXOR(lit(1L << j)))): _*)
@@ -163,7 +159,8 @@ object Ann {
     val assigned = model.transform(base)
       .select(col("id"), col("v"), col("prediction").as("cell"))
       .withColumn("nrm", sqrt(nativeDot(col("v"), col("v"))))
-      .cache()
+      // read by the probe list and the candidate side: assigned once
+      .localCheckpoint(eager = false)
 
     val spark = df.sparkSession
     import spark.implicits._
@@ -200,13 +197,15 @@ object Ann {
   }
 
   /** The strided-sample quantizer's inputs: the normalized vectors
-    * (id, v, nrm), cached (the caller releases them), and as cell centers
-    * (cell, cv0, cn0) the vectors whose id is a multiple of
-    * count / `nCells`, at most `nCells` of them. Counts `df` once. */
+    * (id, v, nrm) behind a lazy local checkpoint that the count
+    * materializes (the centers and the assignment read it again), and as
+    * cell centers (cell, cv0, cn0) the vectors whose id is a multiple of
+    * count / `nCells`, at most `nCells` of them. */
   private def stridedCenters(df: DataFrame, id: String, vec: String,
                              nCells: Int): (DataFrame, DataFrame) = {
     GraftExtensions.register(df.sparkSession)
-    val base = normalized(df, id, vec, "id", "v", "nrm").cache()
+    val base = normalized(df, id, vec, "id", "v", "nrm")
+      .localCheckpoint(eager = false)
     val n = base.count()
     val stride = math.max(1L, n / nCells)
     val centers = base.where(col("id") % stride === 0)
@@ -252,10 +251,6 @@ object Ann {
     assignToCenters(base, centers)
       .write.mode("overwrite").partitionBy("cell")
       .parquet(s"$path/vectors")
-    // both writes are done — this call is terminal, so the cache it took
-    // (normalized corpus, read by the centers probe and the assignment)
-    // is released here rather than leaked to the session
-    base.unpersist()
   }
 
   /** Build-if-absent wrapper over [[writeIvfIndex]]: the operational
@@ -375,7 +370,8 @@ object Ann {
           .orderBy(col("csim").desc, col("cell").asc)))
       .where(col("pr") <= nProbe)
       .select(col("query_id"), col("qv"), col("qn"), col("cell"))
-      .cache()
+      // materialized by the probed-cell collect, read again by the join
+      .localCheckpoint(eager = false)
     // literal probe-cell list → partition pruning on the vector scan
     // (probed cells ≤ nCells, a tiny driver-side collect)
     val probedCells = probes.select(col("cell")).distinct()
@@ -398,8 +394,10 @@ object Ann {
   def cosineDupPairsLsh(df: DataFrame, id: String, vec: String,
                         minCosine: Double, nPlanes: Int = 8): DataFrame = {
     GraftExtensions.register(df.sparkSession)
+    // read by both self-join sides: hashed once, as in lshTopK
     val b = lshBuckets(df, id, vec, nPlanes)
-      .withColumn("nrm", sqrt(nativeDot(col("v"), col("v")))).cache()
+      .withColumn("nrm", sqrt(nativeDot(col("v"), col("v"))))
+      .localCheckpoint(eager = false)
     b.select(col("bucket"), col("id").as("id_a"), col("v").as("va"),
         col("nrm").as("na"))
       .join(b.select(col("bucket"), col("id").as("id_b"),
@@ -417,7 +415,11 @@ object Ann {
   def cosineDupPairs(df: DataFrame, id: String, vec: String,
                      minCosine: Double): DataFrame = {
     GraftExtensions.register(df.sparkSession)
-    val v = normalized(df, id, vec, "id", "v", "n").cache()
+    // the non-equi self-join plans as a cartesian product, which reads
+    // its right side once per left partition: normalized once, as in
+    // lshTopK
+    val v = normalized(df, id, vec, "id", "v", "n")
+      .localCheckpoint(eager = false)
     v.toDF("id_a", "va", "na")
       .join(v.toDF("id_b", "vb", "nb"),
         col("id_a") < col("id_b"))
@@ -502,7 +504,9 @@ object Ann {
     * centroids broadcast; nothing is ever all-pairs across cells. */
   def semanticDedup(df: DataFrame, id: String, vec: String,
                     nCells: Int = 16, minCosine: Double = 0.9): DataFrame = {
-    val asg = clusterAssignmentsWithVecs(df, id, vec, nCells).cache()
+    // `asg`'s three readers share the assignment window's exchange
+    // (ReusedExchange); the corpus under it is stridedCenters' checkpoint
+    val asg = clusterAssignmentsWithVecs(df, id, vec, nCells)
     val pairs = asg.select(col("cell"), col("id").as("id_a"),
         col("v").as("va"), col("nrm").as("na"), col("csim").as("ca"))
       .join(asg.select(col("cell"), col("id").as("id_b"),
@@ -638,7 +642,6 @@ object Ann {
     GraftExtensions.register(corpus.sparkSession)
     val enc = sqEncode(corpus, id, vec)
       .withColumn("nrm", sqrt(nativeDot(col("vh"), col("vh"))))
-      .cache()
     val q = enc.join(broadcast(queryIds.select(col(id).as("id"))),
         Seq("id"), "left_semi")
       .select(col("id").as("query_id"), col("vh").as("qv"),

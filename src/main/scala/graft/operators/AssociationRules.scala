@@ -107,8 +107,8 @@ object AssociationRules {
     * which at toy scale cost a whole extra scheduling round-trip and at
     * 100 TB a blocking barrier before any downstream stage could plan).
     * Callers that mine the same corpus several ways ([[rulesFamily]])
-    * pass a CACHED per-basket frame so the heavy shuffle is paid once
-    * across all minings. */
+    * pass one shared per-basket frame, whose exchange Catalyst reuses,
+    * so the heavy shuffle is paid once across all minings. */
   private def rawFromBaskets(perBasket: DataFrame,
                              params: Params): DataFrame = {
     // total distinct baskets BEFORE the size filter (views.py:163-189) —
@@ -216,14 +216,16 @@ object AssociationRules {
     * when the two confidences differ (`views.py:310`, `views.py:502` —
     * bug-compatible per SURVEY §7.5#3). Input: `rulesRaw` output. */
   def bothDirections(raw: DataFrame, minConfidence: Double): DataFrame = {
-    // the union's two branches would otherwise each recompute the whole
-    // mining pipeline behind `raw`; the rule table is ≤ pairLimit rows,
-    // so pinning it costs nothing and halves the work
-    raw.cache()
-    val fwd = raw.select(
+    // the union's two branches would otherwise each recompute the part of
+    // the mining pipeline above its shared exchanges (measured slower at
+    // sf0.1); the rule table is ≤ pairLimit rows, and a lazy local
+    // checkpoint pins it until the ContextCleaner reclaims it with the
+    // returned frame
+    val rules = raw.localCheckpoint(eager = false)
+    val fwd = rules.select(
       col("item_a").as("antecedent"), col("item_b").as("consequent"),
       col("support"), col("confidence"), col("lift"))
-    val rev = raw
+    val rev = rules
       .where(col("confidence_rev") =!= col("confidence"))
       .select(
         col("item_b").as("antecedent"), col("item_a").as("consequent"),
@@ -236,14 +238,14 @@ object AssociationRules {
   /** The whole rules family — forward top-N (R1/T4), reverse-direction
     * emission (R1 both), and eligible-restricted rules (R2/T3) — off ONE
     * materialization of the basket-grain aggregate. Run separately, the
-    * three minings each re-pay the full transaction shuffle (the
-    * isolation-correct but 3× price the per-query registrations pay
-    * under a cache-clearing harness); this entry point is the amortized
-    * contract: the per-basket arrays are cached once, the full-population
-    * rule table is cached once and serves both the forward and reverse
-    * families, and the eligible mining derives its restricted baskets by
-    * an `array_intersect` against the broadcast eligible set — map-side
-    * over the cached arrays, no second pass over the transactions.
+    * three minings each re-pay the full transaction shuffle (the 3×
+    * price the isolated per-query registrations pay); this entry point
+    * is the amortized contract: the per-basket arrays are computed once,
+    * the full-population rule table is computed once and serves both the
+    * forward and reverse families, and the eligible mining derives its
+    * restricted baskets by an `array_intersect` against the broadcast
+    * eligible set — map-side over the shared arrays, no second pass over
+    * the transactions.
     *
     * Output: (`family`, `antecedent`, `consequent`, `support`,
     * `confidence`, `lift`) rounded to 6 digits, where family is
@@ -432,12 +434,14 @@ object AssociationRules {
     * partition per ~20k baskets, clamped to the cluster's default
     * parallelism, recovers the constant at small inputs and is a no-op
     * at scale (the clamp binds and PFP gets full parallelism). The
-    * baskets frame is cached because MLlib scans it multiple times
-    * (input count, frequent-item scan, itemset generation); the cache is
-    * query-local by the engine's harness convention. */
+    * baskets frame sits behind a local checkpoint, materialized by the
+    * basket count, because MLlib scans it multiple times (input count,
+    * frequent-item scan, itemset generation, and the returned rules'
+    * lineage). */
   def fpGrowthRules(tx: DataFrame, basket: String, item: String,
                     params: Params = Params()): DataFrame = {
-    val baskets = basketItems(tx, basket, item, params.maxBasketSize).cache()
+    val baskets = basketItems(tx, basket, item, params.maxBasketSize)
+      .localCheckpoint(eager = false)
     val n = baskets.count()
     val parts = math.max(1L, math.min(
       baskets.sparkSession.sparkContext.defaultParallelism.toLong,
@@ -475,7 +479,7 @@ object AssociationRules {
     * AssociationRulesSpec; the multi-itemset path stays on MLlib.
     *
     * Why this exists: MLlib FPGrowth pays a per-partition conditional-
-    * tree-build constant plus three scans of the cached basket frame —
+    * tree-build constant plus three scans of the basket frame —
     * measured at 3.4-3.5 s at sf0.1 (5.5× the 0.6 s single-node mirror,
     * the board's worst adjudicated ratio in r14) — for a query whose
     * gated output never needs itemsets beyond pairs. This plan is the

@@ -114,13 +114,14 @@ object Churn {
       Seq("recency", "frequency", "monetary", "product_variety",
         "avg_purchase_gap"), catCols, seed, maxIter).fit(train)
     val scored = model.transform(test).cache()
-    val acc = Models.evaluate(scored)("accuracy")
-    val churnRecall = new org.apache.spark.ml.evaluation
-      .MulticlassClassificationEvaluator()
-      .setLabelCol("label").setPredictionCol("prediction")
-      .setMetricName("recallByLabel").setMetricLabel(1.0)
-      .evaluate(scored)
-    scored.unpersist()
-    (acc, churnRecall)
+    try {
+      val acc = Models.evaluate(scored)("accuracy")
+      val churnRecall = new org.apache.spark.ml.evaluation
+        .MulticlassClassificationEvaluator()
+        .setLabelCol("label").setPredictionCol("prediction")
+        .setMetricName("recallByLabel").setMetricLabel(1.0)
+        .evaluate(scored)
+      (acc, churnRecall)
+    } finally scored.unpersist()
   }
 }

@@ -309,7 +309,8 @@ object Collab {
     // contiguous user index, deterministic (sorted by user id)
     val uidx = counts.select(col("u")).distinct().orderBy(col("u"))
       .rdd.map(_.getLong(0)).zipWithIndex()
-      .map { case (u, i) => (u, i.toInt) }.toDF("u", "uidx").cache()
+      .map { case (u, i) => (u, i.toInt) }.toDF("u", "uidx")
+      .localCheckpoint(eager = false) // materialized by the count
     val nUsers = uidx.count().toInt
     val itemRows = counts.join(uidx, Seq("u"))
       .select(col("i"), col("uidx"), col("c").cast("double"))
@@ -715,13 +716,12 @@ object Collab {
     * sims), top-`k` CF recommendations, and the hybrid assoc+CF blend —
     * off ONE materialization of each shared stage. Run separately, the
     * three queries each re-pay the item self-join (the dominant
-    * shuffle — the isolation-correct but 3× price the per-query
-    * registrations pay under a cache-clearing harness); this entry point
-    * is the amortized contract, the CF twin of
-    * [[AssociationRules.rulesFamily]]: the user-item counts are cached
-    * once, the similarity pairs are cached once and serve both the
+    * shuffle — the 3× price the isolated per-query registrations pay);
+    * this entry point is the amortized contract, the CF twin of
+    * [[AssociationRules.rulesFamily]]: the user-item counts are computed
+    * once, the similarity pairs are computed once and serve both the
     * top-similarities listing and the candidate scoring, and the scored
-    * CF candidates are cached once and serve both the top-k
+    * CF candidates are computed once and serve both the top-k
     * recommendations and the hybrid blend's CF side.
     *
     * `userFilter` builds the target-user predicate from whichever column

@@ -54,15 +54,17 @@ object CurationPipeline {
     // 24-byte (digest, id) rows and the keep-id set comes back as a
     // map-side BroadcastHashJoin LeftSemi — measured 8.2 s vs 18.5 s
     // end-to-end at sf0.1 for q_training_mix).
-    // The survivor frame is CACHED: every later stage (LSH shingling,
-    // the near-dup anti join, both decontamination branches) re-reads
-    // it, and without the cache each consumer would replay the
-    // regex-heavy quality pass + dedup joins from the scan up (~25%
-    // end-to-end at sf0.1). Post-dedup is the right cache point at
-    // cluster scale too — it is the smallest the corpus gets before the
-    // cheap final predicates.
+    // The survivor frame is MATERIALIZED by a lazy local checkpoint
+    // (released by the ContextCleaner with the returned frame): every
+    // later stage (LSH shingling, the near-dup anti join, both
+    // decontamination branches) re-reads it, and without it each
+    // consumer would replay the regex-heavy quality pass + dedup joins
+    // from the scan up (~25% end-to-end at sf0.1). Post-dedup is the
+    // right materialization point at cluster scale too — it is the
+    // smallest the corpus gets before the cheap final predicates.
     val exactKeep = Dedup.exactByContent(f1, id, text).select(col(id))
-    val f2 = f1.join(exactKeep, Seq(id), "left_semi").cache()
+    val f2 = f1.join(exactKeep, Seq(id), "left_semi")
+      .localCheckpoint(eager = false)
     // 3 — near-dup prune: drop the higher id of every verified LSH pair
     val near = NearDup.minHashPortableUnsorted(f2, id, text,
       cfg.shingleLen, cfg.minJaccard, cfg.numHashes, cfg.bandSize)

@@ -79,16 +79,7 @@ object HeavyHitters {
     * oracle. The candidate frame is ≤ k terms per partition, deduped by
     * one candidate-grain exchange (≤ k·P rows, trivially small) and then
     * BROADCAST — the token stream is filtered map-side, never collected
-    * to the driver.
-    *
-    * CACHING CONTRACT (r15 advice — this is a public API note, not an
-    * implementation detail): the returned plan holds a `.cache()` of the
-    * tiny (≤ (k+1)·P rows) MG summary so its two consumers (candidates +
-    * token total) split one scan. The cache registers in the session
-    * catalog and is NOT self-releasing — call
-    * `spark.catalog.clearCache()` (the graft harness does so after every
-    * query) or `unpersist` the frame when the result has been consumed,
-    * or repeated library calls accumulate summary blocks. */
+    * to the driver. */
   def frequentTermsMG(docs: DataFrame, text: String, denom: Int): DataFrame = {
     val k = mgCounters(denom)
     val toks = tokens(docs, text)
@@ -96,10 +87,9 @@ object HeavyHitters {
     // partition's exact token count (term = null, unreachable for real
     // tokens), so the corpus total rides the same pass — r14 derived it
     // from a third full tokenize, which the advice flagged. The summary
-    // is ≤ (k+1)·P rows; caching it costs nothing and lets the candidate
-    // and total consumers split it without re-running the scan (the
-    // cache is query-local by the harness convention — the runners
-    // clearCache() after each query).
+    // is ≤ (k+1)·P rows; a lazy local checkpoint lets the candidate and
+    // total consumers split it without re-running the scan, and the
+    // ContextCleaner releases it with the returned frame.
     val summary = toks.select(col("term")).as[String](Encoders.STRING)
       .mapPartitions { it =>
         // classic MG: k counters; a miss with a full table decrements
@@ -125,7 +115,7 @@ object HeavyHitters {
         counters.keysIterator.map(t => (t, 0L)) ++
           Iterator((null: String, nTokens))
       }(Encoders.tuple(Encoders.STRING, Encoders.scalaLong))
-      .toDF("term", "n").cache()
+      .toDF("term", "n").localCheckpoint(eager = false)
     val candidates = summary.where(col("term").isNotNull)
       .select(col("term")).distinct()
     val total = summary.where(col("term").isNull)

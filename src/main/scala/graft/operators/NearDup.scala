@@ -141,9 +141,9 @@ object NearDup {
     //    DISTINCT, the size counts), so none of them shuffles again:
     //    the shingle stream, the widest frame in the query, is never
     //    exchanged at all;
-    //  3. sharing — the former rawShingles.cache() wrapped an AQE plan
-    //    in an InMemoryRelation, which broke exchange reuse ABOVE it
-    //    (the sf0.1 plan held 50 parquet scans); the plain exchange is
+    //  3. sharing — a cached rawShingles would wrap an AQE plan in an
+    //    InMemoryRelation, which breaks exchange reuse ABOVE it (the
+    //    sf0.1 plan held 50 parquet scans); the plain exchange is
     //    canonically shareable.
     // At 100 TB this is one linear shuffle of the (id, text) batch —
     // bounded by input size, like any ingest repartition.
@@ -273,9 +273,7 @@ object NearDup {
     * lambda calls per document, and the md5-derived hash (unlike
     * xxhash64) is reproducible in any engine, which is what lets the
     * PRODUCTION 16-bit-band path in [[simHashPairs]] carry a full SQL
-    * oracle. The xxhash64-backed `simhash64` expression stays registered
-    * for deployments that prefer the cheaper per-token hash over
-    * cross-engine portability. */
+    * oracle. */
   def simHash(docs: DataFrame, id: String, text: String): DataFrame = {
     graft.plans.GraftExtensions.register(docs.sparkSession)
     docs.select(col(id).as("id"),
@@ -291,8 +289,8 @@ object NearDup {
     * (guarantees candidacy for Hamming ≤ 3) and are verified by exact
     * Hamming ≤ `maxHamming`. Pure integer arithmetic on a portable hash —
     * the whole pipeline incl. bucketing mirrors into ANSI SQL for the
-    * oracle gate; [[simHashPairs]] below keeps the fast native-expression
-    * 64-bit form (xxhash64-based, engine-specific).
+    * oracle gate; [[simHashPairs]] below is the 64-bit form with 16-bit
+    * bands, also on the md5-derived hash.
     *
     * Scale caveat: 8-bit bands give only 256 buckets per band, so bucket
     * occupancy — and the candidate join — grows quadratically with corpus
@@ -307,7 +305,10 @@ object NearDup {
       .where(size(col("wa")) > 0)
       .select(col("id"),
         call_function("simhash_portable32", col("wa")).as("simhash"))
-      .cache()
+      // read by both band-join sides, which plan as a broadcast join and
+      // share no exchange: a lazy local checkpoint fingerprints once, and
+      // the ContextCleaner releases it with the returned frame
+      .localCheckpoint(eager = false)
     val banded = fp.select(col("id"), col("simhash"),
         explode(expr(
           """transform(sequence(0, 3), b -> named_struct(
@@ -332,7 +333,8 @@ object NearDup {
     * Hamming ≤ `maxHamming`. Bucket join per band — linear shuffle. */
   def simHashPairs(docs: DataFrame, id: String, text: String,
                    maxHamming: Int = 3): DataFrame = {
-    val fp = simHash(docs, id, text).cache()
+    // fingerprinted once, as in simHashPortable
+    val fp = simHash(docs, id, text).localCheckpoint(eager = false)
     val banded = fp.select(col("id"), col("simhash"),
         explode(expr(
           """transform(sequence(0, 3), b -> named_struct(

@@ -39,13 +39,13 @@ object QualityModel {
     * to learn — caller should widen the corpus). */
   def distillGopher(docs: DataFrame, id: String, text: String,
                     trainFrac: Double = 0.8, seed: Long = 42L): DataFrame = {
-    // cached: the regex-heavy signal pass is read by the class check, the
-    // two split filters, the fit, and the final scoring — one compute,
-    // not five (tiny: 9 numeric cols per doc; the caller's harness clears
-    // query-local caches once results are materialized)
+    // checkpointed, and materialized by the class check: the regex-heavy
+    // signal pass is read by the class check, the two split filters, the
+    // fit, and the final scoring — one compute, not five (tiny: 9 numeric
+    // cols per doc)
     val sig = TextAnalysis.gopherQuality(docs, id, text)
       .withColumn("label", col("keep").cast("double"))
-      .cache()
+      .localCheckpoint(eager = false)
     require(sig.select(col("label")).distinct().count() == 2,
       "distillGopher: teacher labels are single-class")
     val (train, test) =
@@ -76,20 +76,22 @@ object QualityModel {
     // single-class test split (possible on tiny corpora under the hash
     // split) would otherwise surface as acc=NaN / undefined AUC — a
     // confusing downstream gate failure instead of a clear input error
-    val classCounts = test.cache().groupBy(col("label")).count().collect()
-    require(classCounts.nonEmpty,
-      "heldOutQuality: held-out test slice is empty — corpus too small " +
-        "for the train fraction; lower trainFrac or widen the corpus")
-    require(classCounts.length == 2,
-      s"heldOutQuality: test slice is single-class (label " +
-        s"${classCounts.head.get(0)} only) — accuracy/AUC undefined; " +
-        "widen the corpus so both teacher classes reach the test split")
-    val n = classCounts.map(_.getLong(1)).sum.toDouble
-    val acc = test.where(col("label") === col("prediction")).count() / n
-    val auc = new BinaryClassificationEvaluator()
-      .setRawPredictionCol("rawPrediction").setLabelCol("label")
-      .setMetricName("areaUnderROC").evaluate(test)
-    test.unpersist()
-    (acc, auc)
+    test.cache()
+    try {
+      val classCounts = test.groupBy(col("label")).count().collect()
+      require(classCounts.nonEmpty,
+        "heldOutQuality: held-out test slice is empty — corpus too small " +
+          "for the train fraction; lower trainFrac or widen the corpus")
+      require(classCounts.length == 2,
+        s"heldOutQuality: test slice is single-class (label " +
+          s"${classCounts.head.get(0)} only) — accuracy/AUC undefined; " +
+          "widen the corpus so both teacher classes reach the test split")
+      val n = classCounts.map(_.getLong(1)).sum.toDouble
+      val acc = test.where(col("label") === col("prediction")).count() / n
+      val auc = new BinaryClassificationEvaluator()
+        .setRawPredictionCol("rawPrediction").setLabelCol("label")
+        .setMetricName("areaUnderROC").evaluate(test)
+      (acc, auc)
+    } finally test.unpersist()
   }
 }

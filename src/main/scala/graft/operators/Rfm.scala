@@ -166,7 +166,9 @@ object Rfm {
   def scoresByQuantileEdges(tx: DataFrame, customer: String, basket: String,
                             sales: String, day: String,
                             relativeError: Double = 1e-4): DataFrame = {
-    val b = withRecency(tx, customer, basket, sales, day).cache()
+    // materialized by the quantile probe, read again by the scoring
+    val b = withRecency(tx, customer, basket, sales, day)
+      .localCheckpoint(eager = false)
     def edgeScore(c: Column, edges: Array[Double], reversed: Boolean): Column = {
       // qcut semantics: bins are (e0,e1],(e1,e2]... ties share a bin
       val s = when(c <= edges(0), 1)

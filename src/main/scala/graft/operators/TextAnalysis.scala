@@ -62,13 +62,18 @@ object TextAnalysis {
     * function is CodegenFallback, so this rode every curation map stage
     * INTERPRETED): Σ_w max(1, ⌈len(w)/4⌉) equals the number of greedy
     * `\S{1,4}` matches — each maximal non-whitespace run of length L
-    * yields exactly ⌈L/4⌉ chunks (4,4,…,remainder), and tokens ARE the
-    * maximal non-whitespace runs of the trimmed text. `greatest(1, ·)`
-    * reproduces the blank/empty-document case, where
-    * `split(trim(t), "\s+")` yields `[""]` and the old fold counted 1;
-    * the `when` preserves null-in → null-out. Bit-identical on the
-    * corpus (OPTIMIZATION_r18 §6, count + Σ xxhash64 per doc) and ~19%
-    * faster at the sf0.1 grain; oracle-gated in every consumer. */
+    * yields exactly ⌈L/4⌉ chunks (4,4,…,remainder), and inside the text
+    * tokens ARE the maximal non-whitespace runs. At the edges they are
+    * not: Spark's `trim` strips only spaces (0x20), so a text that starts
+    * or ends with other whitespace splits into an extra EMPTY token,
+    * which the old fold and `n_words` count and this form does not —
+    * `"cat\n"` gives `n_words` 2 but `token_estimate` 1 (ROADMAP item 7
+    * picks the one definition). `greatest(1, ·)` reproduces the
+    * blank/empty-document case, where `split(trim(t), "\s+")` yields
+    * `[""]` and the old fold counted 1; the `when` preserves null-in →
+    * null-out. Bit-identical on the corpus (OPTIMIZATION_r18 §6, count +
+    * Σ xxhash64 per doc) and ~19% faster at the sf0.1 grain;
+    * oracle-gated in every consumer. */
   def tokenCountEstimate(text: Column): Column =
     when(text.isNull, lit(null).cast("long"))
       .otherwise(greatest(lit(1L),

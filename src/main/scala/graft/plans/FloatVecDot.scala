@@ -87,57 +87,6 @@ case class FloatVecDot(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Native 64-bit SimHash (Charikar '02) over a token array: each token's
-  * xxhash64 (seed 42, matching Spark's `xxhash64`) votes ±1 on every bit
-  * position; the sign of each vote sum is the fingerprint bit.
-  *
-  * One JVM call per ROW instead of the HOF form's tokens×64 interpreted
-  * lambda invocations ([[graft.operators.NearDup.simHash]]'s measured
-  * bottleneck). `CodegenFallback` is fine here: the per-row work (a tight
-  * Scala loop) dwarfs the virtual-call overhead the fallback adds. */
-case class SimHash64(child: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
-    with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"simhash64 expects ARRAY<STRING>, got ${other.sql}")
-  }
-  override def dataType: DataType = LongType
-  override def prettyName: String = "simhash64"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val tokens = input.asInstanceOf[ArrayData]
-    val votes = new Array[Long](64)
-    var t = 0
-    val n = tokens.numElements()
-    while (t < n) {
-      val s = tokens.getUTF8String(t)
-      if (s != null) {
-        val h = org.apache.spark.sql.catalyst.expressions.XxHash64Function
-          .hash(s, StringType, 42L)
-        var i = 0
-        while (i < 64) {
-          votes(i) += (if (((h >>> i) & 1L) == 1L) 1L else -1L)
-          i += 1
-        }
-      }
-      t += 1
-    }
-    var fp = 0L
-    var i = 0
-    while (i < 64) {
-      if (votes(i) > 0) fp |= (1L << i)
-      i += 1
-    }
-    fp
-  }
-
-  override protected def withNewChildInternal(newChild: Expression)
-      : Expression = copy(child = newChild)
-}
-
 /** Native 32-bit portable SimHash over a token array: each token's
   * md5-derived 60-bit hash (the value of
   * `CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT)` — first 15 hex
@@ -159,48 +108,12 @@ case class SimHashPortable32(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_portable32"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val tokens = input.asInstanceOf[ArrayData]
-    val md = SimHashPortable32.digest.get()
-    val votes = new Array[Long](32)
-    var t = 0
-    val n = tokens.numElements()
-    while (t < n) {
-      val s = tokens.getUTF8String(t)
-      if (s != null) {
-        md.reset()
-        val d = md.digest(s.getBytes)
-        // first 15 hex digits = big-endian first 8 bytes >>> 4
-        var v = 0L
-        var j = 0
-        while (j < 8) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
-        val h = v >>> 4
-        var i = 0
-        while (i < 32) {
-          votes(i) += (if (((h >>> i) & 1L) == 1L) 1L else -1L)
-          i += 1
-        }
-      }
-      t += 1
-    }
-    var fp = 0L
-    var i = 0
-    while (i < 32) {
-      if (votes(i) > 0) fp |= (1L << i)
-      i += 1
-    }
-    fp
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    GraftHash.simHash(input.asInstanceOf[ArrayData], 32,
+      GraftHash.md5Prefix60)
 
   override protected def withNewChildInternal(newChild: Expression)
       : Expression = copy(child = newChild)
-}
-
-object SimHashPortable32 {
-  private val digest = new ThreadLocal[java.security.MessageDigest] {
-    override def initialValue(): java.security.MessageDigest =
-      java.security.MessageDigest.getInstance("MD5")
-  }
 }
 
 /** Native codegen'd `md5_prefix60(string) -> BIGINT`: the first 60 bits
@@ -261,6 +174,36 @@ object GraftHash {
     var j = 0
     while (j < 8) { v = (v << 8) | (d(j) & 0xffL); j += 1 }
     v
+  }
+
+  /** SimHash (Charikar '02) over a token array: each non-null token's
+    * `hash` votes ±1 on bits 0 until `bits`; the sign of each vote sum is
+    * the fingerprint bit. The one vote loop behind both portable SimHash
+    * expressions. */
+  def simHash(tokens: ArrayData, bits: Int,
+              hash: org.apache.spark.unsafe.types.UTF8String => Long): Long = {
+    val votes = new Array[Long](bits)
+    var t = 0
+    val n = tokens.numElements()
+    while (t < n) {
+      val s = tokens.getUTF8String(t)
+      if (s != null) {
+        val h = hash(s)
+        var i = 0
+        while (i < bits) {
+          votes(i) += (if (((h >>> i) & 1L) == 1L) 1L else -1L)
+          i += 1
+        }
+      }
+      t += 1
+    }
+    var fp = 0L
+    var i = 0
+    while (i < bits) {
+      if (votes(i) > 0) fp |= (1L << i)
+      i += 1
+    }
+    fp
   }
 
   private val wsPattern = java.util.regex.Pattern.compile("\\s+")
@@ -383,12 +326,13 @@ object GraftHash {
 /** Native 64-bit PORTABLE SimHash over a token array: each token's full
   * 64-bit md5 prefix (big-endian first 8 bytes, the unsigned value of
   * `'0x' || substr(md5(t), 1, 16)`) votes ±1 on bits 0..63; the sign of
-  * each vote sum is the fingerprint bit. Same algorithm as [[SimHash64]]
-  * but on a hash any engine can reproduce, so the WHOLE production
-  * simhash path — 16-bit banding included — mirrors into the DuckDB
-  * oracle ([[graft.operators.NearDup.simHashPairs]]); the xxhash64-backed
-  * [[SimHash64]] stays registered for non-portable deployments that want
-  * the cheaper per-token hash. */
+  * each vote sum is the fingerprint bit. The hash is one any engine can
+  * reproduce, so the WHOLE production simhash path — 16-bit banding
+  * included — mirrors into the DuckDB oracle
+  * ([[graft.operators.NearDup.simHashPairs]]). One JVM call per ROW
+  * instead of the HOF form's tokens×64 interpreted lambda invocations;
+  * `CodegenFallback` is fine here, since the per-row loop dwarfs the
+  * virtual-call overhead the fallback adds. */
 case class SimHashPortable64(child: Expression)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression
     with org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback {
@@ -401,31 +345,9 @@ case class SimHashPortable64(child: Expression)
   override def dataType: DataType = LongType
   override def prettyName: String = "simhash_portable64"
 
-  override protected def nullSafeEval(input: Any): Any = {
-    val tokens = input.asInstanceOf[ArrayData]
-    val votes = new Array[Long](64)
-    var t = 0
-    val n = tokens.numElements()
-    while (t < n) {
-      val s = tokens.getUTF8String(t)
-      if (s != null) {
-        val h = GraftHash.md5First64(s)
-        var i = 0
-        while (i < 64) {
-          votes(i) += (if (((h >>> i) & 1L) == 1L) 1L else -1L)
-          i += 1
-        }
-      }
-      t += 1
-    }
-    var fp = 0L
-    var i = 0
-    while (i < 64) {
-      if (votes(i) > 0) fp |= (1L << i)
-      i += 1
-    }
-    fp
-  }
+  override protected def nullSafeEval(input: Any): Any =
+    GraftHash.simHash(input.asInstanceOf[ArrayData], 64,
+      GraftHash.md5First64)
 
   override protected def withNewChildInternal(newChild: Expression)
       : Expression = copy(child = newChild)
@@ -704,9 +626,6 @@ object GraftExtensions {
       new ExpressionInfo(classOf[FloatVecDot].getName, "fvec_dot"),
       (children: Seq[Expression]) =>
         FloatVecDot(children.head, children(1))),
-    (new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (children: Seq[Expression]) => SimHash64(children.head)),
     (new FunctionIdentifier("simhash_portable32"),
       new ExpressionInfo(classOf[SimHashPortable32].getName,
         "simhash_portable32"),

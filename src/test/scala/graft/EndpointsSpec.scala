@@ -1,12 +1,26 @@
 package graft
 
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.functions._
+import org.scalatest.{Failed, Outcome, Succeeded}
 
 /** Smoke of the EP facade (SURVEY §3) on the sf0.001 testdata — the
-  * "reference user switches over" surface. */
+  * "reference user switches over" surface. Every test also checks that
+  * the endpoints it called left no frame in the session's CacheManager. */
 class EndpointsSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  override def withFixture(test: NoArgTest): Outcome = {
+    val cacheManager =
+      spark.asInstanceOf[ClassicSession].sharedState.cacheManager
+    spark.catalog.clearCache()
+    super.withFixture(test) match {
+      case Succeeded if !cacheManager.isEmpty =>
+        Failed(s"${test.name} left a frame in the CacheManager")
+      case outcome => outcome
+    }
+  }
   private def li = spark.read.parquet(s"$dir/lineitem.parquet")
   private def orders = spark.read.parquet(s"$dir/orders.parquet")
 
@@ -27,11 +41,23 @@ class EndpointsSpec extends SparkSpec {
   }
 
   test("EP-1 association rules with a period window") {
-    val rules = Endpoints.associationRules(li, "l_orderkey", "l_partkey",
-      periodDays = Some(365), col("l_shipdate"), 0.0, 0.0, 50)
-    val rows = rules.collect()
+    def ep1(tx: org.apache.spark.sql.DataFrame) = Endpoints.associationRules(
+      tx, "l_orderkey", "l_partkey", periodDays = Some(365),
+      col("l_shipdate"), 0.0, 0.0, 50).collect()
+    val tx = li
+    val rows = ep1(tx)
     assert(rows.nonEmpty && rows.length <= 50)
     assert(rows.forall(_.getAs[Double]("confidence") >= 0.0))
+    // a repeated request is answered from the kept response, without a job
+    val (jobs, again) = Metrics.jobsDuring(spark)(ep1(tx))
+    assert(jobs == 0 && again.sameElements(rows))
+    // a new file under the same input path is a new request
+    val path = java.nio.file.Files.createTempDirectory("graftep1").toString
+    tx.write.mode("overwrite").parquet(path)
+    ep1(spark.read.parquet(path))
+    tx.limit(100).write.mode("append").parquet(path)
+    val grown = spark.read.parquet(path)
+    assert(Metrics.jobsDuring(spark)(ep1(grown))._1 > 0)
   }
 
   test("EP-2 regenerate segments writes and returns the segment table") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.classic.{SparkSession => ClassicSession}
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Global plan-shape guard — SCALE.md's audit, automated. For every
@@ -12,6 +13,10 @@ import org.apache.spark.sql.execution.SparkPlan
   * scaladoc. A new query — or a refactor of an old one — that silently
   * degrades a join to all-pairs fails here at test time instead of in a
   * cluster run.
+  *
+  * The same loop is the leak check: building a query must leave no frame
+  * in the session's CacheManager (a `cache()` registers at construction,
+  * so an unreleased one shows before any action runs).
   *
   * Skipped (with reason) rather than weakened:
   *  - MLlib-training gates (model zoo, GBT bands, FP-Growth, MinHashLSH,
@@ -57,9 +62,15 @@ class PlanShapeSpec extends SparkSpec {
     n
   }
 
+  private def cacheManager =
+    spark.asInstanceOf[ClassicSession].sharedState.cacheManager
+
   Queries.specs.filterNot(sp => materializingGates(sp.name)).foreach { sp =>
     test(s"${sp.name}: physical plan is CartesianProduct-free") {
+      spark.catalog.clearCache()
       val df = sp.fn(spark, dir)
+      assert(cacheManager.isEmpty,
+        s"${sp.name} left a frame in the CacheManager")
       // sparkPlan, NOT executedPlan: with AQE on (Spark 4 default) the
       // executed plan is a single AdaptiveSparkPlanExec LEAF — foreach
       // sees one node and every assertion here passes vacuously (round-9
